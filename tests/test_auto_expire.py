@@ -28,7 +28,7 @@ def _data_bytes(root: str) -> int:
 def test_auto_expire_bounds_retained_history(spark, tmp_path):
     eng = CdcEngine(spark, str(tmp_path / "t"), num_buckets=4,
                     auto_compact_every=None, auto_expire_every=4,
-                    expire_keep_last=2, use_arrow_normalize=False)
+                    expire_keep_last=2)
     # 12 units, each rewriting the same 8 keys: without expiry every COW
     # commit's files are retained forever (12x the live size)
     for u in range(12):

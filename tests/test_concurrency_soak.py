@@ -87,8 +87,7 @@ def _oracle_app() -> dict:
 
 def test_soak_apply_vs_optimize_vs_dml(spark, tmp_path):
     root = str(tmp_path / "t")
-    eng = CdcEngine(spark, root, num_buckets=32, auto_compact_every=None,
-                    use_arrow_normalize=False)
+    eng = CdcEngine(spark, root, num_buckets=32, auto_compact_every=None)
     # seed the DML keyspace through the engine (one extra commit)
     seed = [_ev(i, "insert", f"dml/r{i % 3}", f"g{i}.py", f"d{i}")
             for i in range(N_DML_KEYS)]

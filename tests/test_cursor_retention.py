@@ -138,7 +138,7 @@ def test_engine_auto_expiry_respects_registered_consumer(spark, tmp_path):
 
     eng = CdcEngine(spark, str(tmp_path / "t"), num_buckets=4,
                     auto_compact_every=None, auto_expire_every=3,
-                    expire_keep_last=1, use_arrow_normalize=False)
+                    expire_keep_last=1)
     eng.apply_log(spark.createDataFrame([ev(i, f"p{i}", "s") for i in range(4)],
                                         EVENT_SCHEMA),
                   n_batches=1, total_events=4, cache_log=False)

@@ -46,7 +46,7 @@ UPDATES = [
 def _final(spark, root, fuse: str):
     os.environ["SPARK_GRAFT_MERGE_FUSE"] = fuse
     try:
-        eng = CdcEngine(spark, root, num_buckets=8, use_arrow_normalize=False)
+        eng = CdcEngine(spark, root, num_buckets=8)
         eng.apply_log(spark.createDataFrame(SEED, EVENT_SCHEMA),
                       events_per_batch=100)
         eng.apply_log(spark.createDataFrame(UPDATES, EVENT_SCHEMA),

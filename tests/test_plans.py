@@ -121,3 +121,42 @@ def test_no_collect_in_operator_sources():
             if not any("# bounded-collect:" in ln for ln in window):
                 offenders.append(f"{rel}:{i}")
     assert not offenders, offenders
+
+
+def test_mor_unit_rides_one_exchange_and_one_sort(spark, tmp_path, monkeypatch):
+    """A pre-grouped MOR unit: the batch is shuffled once by the write's
+    bucket-group key and sorted once, by the reduce window — the write's
+    declared layout sort is a prefix of that ordering and is elided. Its
+    delta files are byte-identical to the ones the key-shuffled reduce plus
+    repartition-and-sort write path produces."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from translator_ingests_spark.cdc.apply import CdcEngine
+
+    real_parquet = DataFrameWriter.parquet
+    log = generate_event_log(spark, 1000, seed=3)
+
+    def run(root):
+        plans = []
+
+        def capture(self, path, *a, **k):
+            plans.append(plan_of(self._df))
+            return real_parquet(self, path, *a, **k)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+        eng = CdcEngine(spark, str(root), num_buckets=8, write_mode="mor")
+        eng.apply_log(log, n_batches=1)
+        monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+        files = eng.table.current().files
+        assert files and all(f.get("delta") for f in files)
+        blobs = sorted(open(f["path"], "rb").read() for f in files)
+        return plans, blobs
+
+    plans, blobs = run(tmp_path / "pre")
+    assert len(plans) == 1
+    assert plans[0].count("Exchange") == 1
+    assert plans[0].count("Sort [") == 1, plans[0]
+
+    monkeypatch.setenv("SPARK_GRAFT_PREGROUP", "0")
+    _, unpre = run(tmp_path / "plain")
+    assert unpre == blobs

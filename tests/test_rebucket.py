@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from translator_ingests_spark.cdc import CdcEngine, EVENT_SCHEMA
 from translator_ingests_spark.lake.maintenance import rebucket, suggest_num_buckets
-from translator_ingests_spark.lake.table import TOMBSTONE_COL
+from translator_ingests_spark.lake.table import TOMBSTONE_COL, ConcurrentModificationError
 
 
 def ev(lsn, op, repo=None, path=None, commit=None, lang=None, content=None,
@@ -62,6 +62,41 @@ def test_merge_and_lookup_after_rebucket(spark, tmp_path):
     rows = eng.table.lookup([("r", "p3")]).collect()
     assert len(rows) == 1 and rows[0]["content"] == "fresh"
 
+
+
+def test_pre_grouped_unit_retried_after_concurrent_rebucket(spark, tmp_path, monkeypatch):
+    """A rebucket commits while a pre-grouped unit is in flight; the unit
+    loses the commit race and retries. Its __bucket/__grp and bucket set were
+    computed under the old count, so the retry must recompute them: every
+    row is then found by a bucket-pruned read and by lookup."""
+    eng = seed(spark, tmp_path, write_mode="mor")
+    table = eng.table
+    real_merge = table.merge
+    calls = []
+
+    def racing_merge(source, **kw):
+        calls.append(kw)
+        if len(calls) == 1:
+            rebucket(table, 16)
+            raise ConcurrentModificationError("a rebucket committed first")
+        return real_merge(source, **kw)
+
+    monkeypatch.setattr(table, "merge", racing_merge)
+    nxt = [ev(100 + i, "insert", "r", f"q{i}", f"c{i}", "py", f"w{i}") for i in range(24)]
+    eng.apply_log(spark.createDataFrame(nxt, EVENT_SCHEMA), events_per_batch=100)
+    assert len(calls) == 2 and calls[0]["src_pre_grouped"]
+    assert calls[0]["src_num_buckets"] == 4 and table.current().num_buckets == 16
+
+    bucket = table._bucket_expr(16, ["repo", "path"])
+    by_bucket: dict[int, set] = {}
+    for r in eng.final_state().select("repo", "path", bucket.alias("b")).collect():
+        by_bucket.setdefault(r["b"], set()).add((r["repo"], r["path"]))
+    assert sum(len(ks) for ks in by_bucket.values()) == 48
+    for b, ks in by_bucket.items():
+        read = {(r["repo"], r["path"]) for r in table.read_buckets([b]).collect()}
+        assert ks <= read, f"bucket {b}"
+        looked = {(r["repo"], r["path"]) for r in table.lookup(sorted(ks)).collect()}
+        assert looked == ks, f"bucket {b}"
 
 def test_rebucket_folds_mor_deltas(spark, tmp_path):
     eng = seed(spark, tmp_path, write_mode="mor")

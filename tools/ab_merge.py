@@ -46,8 +46,7 @@ def main():
             def run() -> float:
                 root = tempfile.mkdtemp(prefix="ab_cdc_")
                 try:
-                    eng = CdcEngine(spark, root, num_buckets=32,
-                                    use_arrow_normalize=False)
+                    eng = CdcEngine(spark, root, num_buckets=32)
                     t0 = time.monotonic()
                     eng.apply_log(spark.read.parquet(log_path), n_batches=4,
                                   total_events=n, cache_log=False)
@@ -80,8 +79,7 @@ def main():
             def run() -> float:
                 root = tempfile.mkdtemp(prefix="ab_clu_")
                 try:
-                    eng = CdcEngine(spark, root, num_buckets=256,
-                                    use_arrow_normalize=False)
+                    eng = CdcEngine(spark, root, num_buckets=256)
                     eng.apply_log(spark.read.parquet(seed_path), n_batches=1,
                                   total_events=200_000, cache_log=False)
                     t0 = time.monotonic()

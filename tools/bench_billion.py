@@ -122,7 +122,7 @@ def main() -> None:
         # retained history grows O(commits x rewrite-size) — the first
         # attempt of this run filled a 250 GB disk at ~600 COW commits
         engines[m] = CdcEngine(spark, root, num_buckets=NUM_BUCKETS,
-                               use_arrow_normalize=False, write_mode=m,
+                               write_mode=m,
                                auto_expire_every=64, expire_keep_last=16)
         state[m] = {"apply_s": 0.0, "bulk_s": 0.0, "tail_s": 0.0,
                     "bulk2_s": 0.0, "samples": []}
@@ -131,7 +131,7 @@ def main() -> None:
     for m in modes:
         warm_root = tempfile.mkdtemp(prefix="billion_warm_")
         warm = CdcEngine(spark, warm_root, num_buckets=32,
-                         use_arrow_normalize=False, write_mode=m)
+                         write_mode=m)
         wlog = generate_event_log(spark, 200_000,
                                   n_spark_partitions=cores * 2, **gen_common)
         warm.apply_log(wlog, n_batches=1, total_events=200_000,

@@ -142,7 +142,7 @@ n = log.count()
 # warm-up (JVM/codegen) on a small slice into a throwaway table
 wm = os.environ.get("SPARK_GRAFT_WRITE_MODE", "cow")
 root_w = tempfile.mkdtemp(prefix="warm_")
-eng_w = CdcEngine(spark, root_w, num_buckets=32, use_arrow_normalize=False,
+eng_w = CdcEngine(spark, root_w, num_buckets=32,
                   write_mode=wm)
 # warm ALL executors: limit(2000) is 1-2 tasks and leaves most executor
 # JVMs JIT-cold in multi-JVM mode (their first measured tasks then run
@@ -155,7 +155,7 @@ eng_w.apply_log(
 shutil.rmtree(root_w, ignore_errors=True)
 
 root = tempfile.mkdtemp(prefix="scale_")
-eng = CdcEngine(spark, root, num_buckets=64, use_arrow_normalize=False,
+eng = CdcEngine(spark, root, num_buckets=64,
                 write_mode=wm)
 c0 = jvm_cpu(); t0 = time.monotonic()
 # cache_log=False: the log is already parquet on shared storage — rescans

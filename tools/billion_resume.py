@@ -51,10 +51,10 @@ def main() -> None:
 
     engines = {
         "cow": CdcEngine(spark, cow_root, num_buckets=256,
-                         use_arrow_normalize=False, write_mode="cow",
+                         write_mode="cow",
                          auto_expire_every=64, expire_keep_last=16),
         "mor": CdcEngine(spark, mor_root, num_buckets=256,
-                         use_arrow_normalize=False, write_mode="mor",
+                         write_mode="mor",
                          auto_expire_every=64, expire_keep_last=16),
     }
     out_path = os.path.join(REPO, "BENCH", "billion.json")

@@ -57,7 +57,7 @@ def main() -> None:
     roots = {m: tempfile.mkdtemp(prefix=f"cold_probe_{m}_") for m in modes}
     engines = {
         m: CdcEngine(spark, os.path.join(roots[m], "t"), num_buckets=32,
-                     use_arrow_normalize=False, write_mode=m,
+                     write_mode=m,
                      auto_expire_every=64, expire_keep_last=16)
         for m in modes
     }

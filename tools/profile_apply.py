@@ -93,7 +93,7 @@ def main():
             n = spark.read.parquet(log_path).count()
             ACC.clear(); CNT.clear()
             root = os.path.join(work, "cdc")
-            eng = CdcEngine(spark, root, num_buckets=32, use_arrow_normalize=False)
+            eng = CdcEngine(spark, root, num_buckets=32)
             t0 = time.monotonic()
             eng.apply_log(spark.read.parquet(log_path), n_batches=4,
                           total_events=n, cache_log=False)
@@ -108,7 +108,7 @@ def main():
             n = spark.read.parquet(log_path).count()
             ACC.clear(); CNT.clear()
             root = os.path.join(work, "cdc")
-            eng = CdcEngine(spark, root, num_buckets=32, use_arrow_normalize=False)
+            eng = CdcEngine(spark, root, num_buckets=32)
             t0 = time.monotonic()
             eng.apply_log(spark.read.parquet(log_path), n_batches=1,
                           total_events=n, cache_log=False)
@@ -135,7 +135,7 @@ def main():
             )
             cn = spark.read.parquet(clu_path).count()
             root = os.path.join(work, "cdc")
-            kw = dict(num_buckets=256, use_arrow_normalize=False)
+            kw = dict(num_buckets=256)
             if point == "mor":
                 kw.update(write_mode="mor", auto_compact_every=None)
             eng = CdcEngine(spark, root, **kw)

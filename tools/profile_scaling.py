@@ -84,7 +84,7 @@ log = spark.read.parquet(log_dir)
 n = log.count()
 
 root_w = tempfile.mkdtemp(prefix="warm_")
-eng_w = CdcEngine(spark, root_w, num_buckets=32, use_arrow_normalize=False)
+eng_w = CdcEngine(spark, root_w, num_buckets=32)
 # warm ALL executors: limit(2000) is 1-2 tasks and leaves most executor
 # JVMs JIT-cold in multi-JVM mode (their first measured tasks then run
 # interpreted); spread enough warm-up tasks that every executor compiles
@@ -99,7 +99,7 @@ shutil.rmtree(root_w, ignore_errors=True)
 spark.sparkContext.setJobGroup("measured", "measured")
 spark.sparkContext.setLocalProperty("spark.job.description", "MEASURED-START")
 root = tempfile.mkdtemp(prefix="prof_")
-eng = CdcEngine(spark, root, num_buckets=64, use_arrow_normalize=False)
+eng = CdcEngine(spark, root, num_buckets=64)
 t0 = time.monotonic()
 eng.apply_log(log, n_batches=n_batches, total_events=n, cache_log=False)
 elapsed = time.monotonic() - t0

@@ -33,7 +33,7 @@ from pyspark.sql import types as T
 
 from translator_ingests_spark.cdc.reduce import lww_reduce
 from translator_ingests_spark.functions.content import content_digest, normalize_content
-from translator_ingests_spark.lake.table import LakeSchema, LakeTable, _SPARK_TYPES
+from translator_ingests_spark.lake.table import LakeSchema, LakeTable, _SPARK_TYPES, empty_frame
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -90,6 +90,12 @@ def compute_code_hash() -> str:
 
 
 class CdcEngine:
+    """Applies an ordered change-event log to one lake table, exactly once.
+    Content is normalized JVM-side (:func:`normalize_content`, ICU4J NFC on
+    non-ASCII rows); no Python worker runs on the apply, lookup or read
+    paths. ``use_arrow_normalize``, ``hot_key_threshold``,
+    ``hot_sample_fraction`` and ``salt_buckets`` are accepted and ignored."""
+
     def __init__(
         self,
         spark: SparkSession,
@@ -113,10 +119,6 @@ class CdcEngine:
         self.spark = spark
         self.root = root
         self.num_buckets = num_buckets
-        self.use_arrow_normalize = use_arrow_normalize
-        self.hot_key_threshold = hot_key_threshold
-        self.hot_sample_fraction = hot_sample_fraction
-        self.salt_buckets = salt_buckets
         self._bloom_cols = bloom_cols
         self._write_options = write_options
         # tombstone-retention policy: every K committed units, fold out
@@ -618,243 +620,241 @@ class CdcEngine:
         t0 = time.monotonic()
         # NOTE: no extra persist here — `data` is a cheap filter over the
         # already-cached batch; a second cache would double memory per batch
-        try:
-            is_valid = (
-                F.col("repo").isNotNull() & F.col("path").isNotNull() & F.col("lsn").isNotNull()
-            )
-            valid = data.filter(is_valid)
+        is_valid = (
+            F.col("repo").isNotNull() & F.col("path").isNotNull() & F.col("lsn").isNotNull()
+        )
+        valid = data.filter(is_valid)
 
-            if pre_lineage is not None:
-                # FAST PATH: lineage/stats/buckets were computed by
-                # apply_log's single upfront aggregation (per batch AND
-                # source partition) — this unit runs exactly ONE Spark job,
-                # the merge itself.
-                lineage_rows = pre_lineage
-            else:
-                # standalone path (schema-split sub-batches, streaming epochs,
-                # direct calls): ONE aggregation job yields per-partition
-                # lineage, the global validity stats (summed driver-side) AND
-                # purely primitive buffers: the pass stays inside
-                # whole-stage-codegen HashAggregate (see apply_log's meta
-                # aggregation comment; the bucket set derives from the
-                # winners table below).
-                lineage_rows = data.groupBy("source_partition").agg(
-                    F.count(F.lit(1)).alias("events_in"),
-                    F.count(F.when(is_valid, 1)).alias("rows"),
-                    F.min(F.when(is_valid, F.col("source_offset"))).alias("offset_min"),
-                    F.max(F.when(is_valid, F.col("source_offset"))).alias("offset_max"),
-                    F.min(F.when(is_valid, F.col("lsn"))).alias("lsn_min"),
-                    F.max(F.when(is_valid, F.col("lsn"))).alias("lsn_max"),
-                ).collect()  # bounded-collect: one row per source partition
-            events_in = sum(r["events_in"] for r in lineage_rows)
-            if events_in == 0:
-                return None
-            n_valid = sum(r["rows"] for r in lineage_rows)
-            lsn_min = min((r["lsn_min"] for r in lineage_rows if r["lsn_min"] is not None),
-                          default=None)
-            lsn_max = max((r["lsn_max"] for r in lineage_rows if r["lsn_max"] is not None),
-                          default=None)
-            lineage = sorted(
-                (
-                    {
-                        "partition": r["source_partition"],
-                        "offset_min": r["offset_min"],
-                        "offset_max": r["offset_max"],
-                        "lsn_min": r["lsn_min"],
-                        "lsn_max": r["lsn_max"],
-                        "rows": r["rows"],
-                    }
-                    for r in lineage_rows
-                    if r["rows"] > 0
-                ),
-                key=lambda d: (d["partition"] is None, d["partition"]),
-            )
-
-            # Materialize the LWW phase-1 winners eagerly (small: one
-            # (key, max lsn) row per key, column-pruned scan) and take ONE
-            # tiny aggregation over the cached rows. Three birds: the exact
-            # key count gates the broadcast of the winners into the candidate
-            # join (≤1M winner rows ≈ tens of MB — event rows then never
-            # shuffle; above that the planner's shuffled-hash + AQE skew path
-            # stands); the affected-bucket set for merge file pruning comes
-            # from |keys| rows instead of a full-scan collect_set; and the
-            # merge job reuses the cached winners instead of re-aggregating
-            # the events.
-            winners = None
-            pre_group = False
-            unit_mode = None
-            small_batch = n_valid <= self.small_batch_events
-            if self.partial_updates:
-                # column-wise reduce (one aggregation); bucket set as on the
-                # small-batch path — from the upfront mask when available
-                from translator_ingests_spark.cdc.reduce import partial_lww_reduce
-
-                if pre_buckets is not None:
-                    affected_buckets = pre_buckets
-                else:
-                    bucket = self.table._bucket_expr(snap.num_buckets, snap.key_cols)
-                    affected_buckets = sorted(
-                        r["__b"]
-                        for r in valid.select(bucket.alias("__b")).distinct().collect()  # bounded-collect: <= num_buckets rows
-                    )
-                reduced = partial_lww_reduce(valid, keys=list(snap.key_cols))
-            elif small_batch:
-                # SMALL-BATCH fast path (round-3 VERDICT #3): below the
-                # threshold the winners persist + exact-count gate are pure
-                # fixed cost. The affected buckets come precomputed from the
-                # upfront bit_or mask when available (zero extra jobs — the
-                # unit runs ONLY the merge) or from a primitive distinct
-                # over the cached events; the one-job window reduce executes
-                # INSIDE the merge's write pass.
-                if pre_buckets is not None:
-                    affected_buckets = pre_buckets
-                else:
-                    bucket = self.table._bucket_expr(snap.num_buckets, snap.key_cols)
-                    affected_buckets = sorted(
-                        r["__b"]
-                        for r in valid.select(bucket.alias("__b")).distinct().collect()  # bounded-collect: <= num_buckets rows
-                    )
-                # PRE-GROUPED unit (guide §2.4 — one exchange per unit):
-                # when the unit writes without reading a target (a MOR
-                # delta commit, or a bulk load onto empty buckets), the
-                # whole pipeline — reduce, derive, layout write — can ride
-                # ONE exchange: partition the batch by the write's
-                # bucket-group mapping up front, run the LWW window
-                # clustered on (__grp, __bucket, keys) (no further
-                # exchange: __grp is a function of the keys), and let the
-                # merge skip its repartition — the reduce window's sort IS
-                # the write sort. COW units with a live target keep the
-                # key-partitioned reduce (their union re-shuffles anyway,
-                # and the key exchange's map-side group-limit prunes dups
-                # before the wire).
-                unit_mode = self._resolve_write_mode(
-                    snap, affected_buckets, n_valid
-                )
-                pre_group = (
-                    bool(affected_buckets)
-                    and os.environ.get("SPARK_GRAFT_PREGROUP", "1") != "0"
-                    and (
-                        unit_mode == "mor"
-                        or not self.table._files_overlapping(
-                            snap, affected_buckets
-                        )
-                    )
-                )
-                if pre_group:
-                    n_parts, group = self.table._write_group(
-                        snap, sorted(set(affected_buckets))
-                    )
-                    bucket = self.table._bucket_expr(
-                        snap.num_buckets, snap.key_cols
-                    )
-                    pv = (
-                        valid.withColumn("__bucket", bucket)
-                        .withColumn("__grp", group)
-                        .repartition(n_parts, "__grp")
-                    )
-                    reduced = lww_reduce(
-                        pv, keys=list(snap.key_cols), simple=True,
-                        simple_via_window=True,
-                        cluster_cols=["__grp", "__bucket"],
-                    )
-                else:
-                    reduced = lww_reduce(
-                        valid, keys=list(snap.key_cols), simple=True,
-                        simple_via_window=True,
-                    )
-            else:
-                winners = valid.groupBy(*snap.key_cols).agg(
-                    F.max(F.col("lsn")).alias("__wl")
-                ).persist()
-                if pre_buckets is not None:
-                    # mask-supplied buckets: the winners stats job shrinks to
-                    # a bare count (primitive buffer, no collect_set)
-                    n_keys = winners.count()
-                    affected_buckets = pre_buckets
-                else:
-                    bucket = self.table._bucket_expr(snap.num_buckets, snap.key_cols)
-                    wstats = winners.agg(
-                        F.count(F.lit(1)).alias("n_keys"),
-                        F.collect_set(bucket).alias("buckets"),
-                    ).collect()[0]  # bounded-collect: one aggregate row
-                    n_keys = wstats["n_keys"]
-                    affected_buckets = sorted(wstats["buckets"] or [])
-                reduced = lww_reduce(
-                    valid,
-                    keys=list(snap.key_cols),
-                    broadcast_winners=n_keys <= 1_000_000,
-                    winners=winners,
-                )
-
-            source = self._derive_columns(reduced, snap)
-            if unit_mode is None:
-                unit_mode = self._resolve_write_mode(
-                    snap, affected_buckets, n_valid
-                )
-            metrics = {
-                "events_in": int(events_in),
-                "invalid_events": int(events_in - n_valid),
-                "write_mode": unit_mode,
-                # retained in the manifest schema for compatibility; always 0
-                # since lww_reduce's primitive-buffer phase-1 made explicit
-                # salting unnecessary (map-side combine collapses hot keys)
-                "hot_keys_salted": 0,
-            }
-            merge_stats: dict = {}
-            new_snap = self._merge_with_retry(
-                source,
-                batch_id=unit_id,
-                lineage=lineage,
-                metrics=metrics,
-                code_hash=self.code_hash,
-                stats_out=merge_stats,
-                # in-order delivery: once this unit commits, every LSN at or
-                # below its max is applied (earlier batches hold only lower
-                # LSNs) — the retention watermark for tombstone compaction.
-                # Scatter delivery gives no such guarantee: watermark holds.
-                advance_watermark_to=(
-                    lsn_max if self._delivery == "in_order" else None
-                ),
-                affected_buckets=affected_buckets,
-                # Observation deadlocks inside a foreachBatch callback —
-                # streaming epochs take the explicit-count path
-                use_observation=self._delivery != "stream",
-                delivery=self._delivery,
-                mode=unit_mode,
-                partial_update=self.partial_updates,
-                src_pre_grouped=pre_group,
-            )
-            if winners is not None:
-                winners.unpersist()
-            elapsed = max(time.monotonic() - t0, 1e-9)
-            n_red = merge_stats.get("rows", 0)
-            n_del = merge_stats.get("deletes", 0)
-            metrics.update(
+        if pre_lineage is not None:
+            # FAST PATH: lineage/stats/buckets were computed by
+            # apply_log's single upfront aggregation (per batch AND
+            # source partition) — this unit runs exactly ONE Spark job,
+            # the merge itself.
+            lineage_rows = pre_lineage
+        else:
+            # standalone path (schema-split sub-batches, streaming epochs,
+            # direct calls): ONE aggregation job yields per-partition
+            # lineage, the global validity stats (summed driver-side) AND
+            # purely primitive buffers: the pass stays inside
+            # whole-stage-codegen HashAggregate (see apply_log's meta
+            # aggregation comment; the bucket set derives from the
+            # winners table below).
+            lineage_rows = data.groupBy("source_partition").agg(
+                F.count(F.lit(1)).alias("events_in"),
+                F.count(F.when(is_valid, 1)).alias("rows"),
+                F.min(F.when(is_valid, F.col("source_offset"))).alias("offset_min"),
+                F.max(F.when(is_valid, F.col("source_offset"))).alias("offset_max"),
+                F.min(F.when(is_valid, F.col("lsn"))).alias("lsn_min"),
+                F.max(F.when(is_valid, F.col("lsn"))).alias("lsn_max"),
+            ).collect()  # bounded-collect: one row per source partition
+        events_in = sum(r["events_in"] for r in lineage_rows)
+        if events_in == 0:
+            return None
+        n_valid = sum(r["rows"] for r in lineage_rows)
+        lsn_min = min((r["lsn_min"] for r in lineage_rows if r["lsn_min"] is not None),
+                      default=None)
+        lsn_max = max((r["lsn_max"] for r in lineage_rows if r["lsn_max"] is not None),
+                      default=None)
+        lineage = sorted(
+            (
                 {
-                    "rows_upserted": int(n_red - n_del),
-                    "rows_deleted": int(n_del),
-                    "dups_dropped": int(n_valid - n_red),
-                    "events_per_sec": round(events_in / elapsed, 2),
-                    "lag_events": (
-                        None if lag_events is None else int(lag_events - events_in)
-                    ),
+                    "partition": r["source_partition"],
+                    "offset_min": r["offset_min"],
+                    "offset_max": r["offset_max"],
+                    "lsn_min": r["lsn_min"],
+                    "lsn_max": r["lsn_max"],
+                    "rows": r["rows"],
                 }
+                for r in lineage_rows
+                if r["rows"] > 0
+            ),
+            key=lambda d: (d["partition"] is None, d["partition"]),
+        )
+
+        # Materialize the LWW phase-1 winners eagerly (small: one
+        # (key, max lsn) row per key, column-pruned scan) and take ONE
+        # tiny aggregation over the cached rows. Three birds: the exact
+        # key count gates the broadcast of the winners into the candidate
+        # join (≤1M winner rows ≈ tens of MB — event rows then never
+        # shuffle; above that the planner's shuffled-hash + AQE skew path
+        # stands); the affected-bucket set for merge file pruning comes
+        # from |keys| rows instead of a full-scan collect_set; and the
+        # merge job reuses the cached winners instead of re-aggregating
+        # the events.
+        winners = None
+        pre_group = False
+        unit_mode = None
+        small_batch = n_valid <= self.small_batch_events
+        if self.partial_updates:
+            # column-wise reduce (one aggregation); bucket set as on the
+            # small-batch path — from the upfront mask when available
+            from translator_ingests_spark.cdc.reduce import partial_lww_reduce
+
+            if pre_buckets is not None:
+                affected_buckets = pre_buckets
+            else:
+                bucket = self.table._bucket_expr(snap.num_buckets, snap.key_cols)
+                affected_buckets = sorted(
+                    r["__b"]
+                    for r in valid.select(bucket.alias("__b")).distinct().collect()  # bounded-collect: <= num_buckets rows
+                )
+            reduced = partial_lww_reduce(valid, keys=list(snap.key_cols))
+        elif small_batch:
+            # SMALL-BATCH fast path (round-3 VERDICT #3): below the
+            # threshold the winners persist + exact-count gate are pure
+            # fixed cost. The affected buckets come precomputed from the
+            # upfront bit_or mask when available (zero extra jobs — the
+            # unit runs ONLY the merge) or from a primitive distinct
+            # over the cached events; the one-job window reduce executes
+            # INSIDE the merge's write pass.
+            if pre_buckets is not None:
+                affected_buckets = pre_buckets
+            else:
+                bucket = self.table._bucket_expr(snap.num_buckets, snap.key_cols)
+                affected_buckets = sorted(
+                    r["__b"]
+                    for r in valid.select(bucket.alias("__b")).distinct().collect()  # bounded-collect: <= num_buckets rows
+                )
+            # PRE-GROUPED unit (guide §2.4 — one exchange per unit):
+            # when the unit writes without reading a target (a MOR
+            # delta commit, or a bulk load onto empty buckets), the
+            # whole pipeline — reduce, derive, layout write — can ride
+            # ONE exchange: partition the batch by the write's
+            # bucket-group mapping up front, run the LWW window
+            # clustered on (__grp, __bucket, keys) (no further
+            # exchange: __grp is a function of the keys), and let the
+            # merge skip its repartition — the reduce window's sort IS
+            # the write sort. COW units with a live target keep the
+            # key-partitioned reduce (their union re-shuffles anyway,
+            # and the key exchange's map-side group-limit prunes dups
+            # before the wire).
+            unit_mode = self._resolve_write_mode(
+                snap, affected_buckets, n_valid
             )
-            manifest = {
-                "batch_id": unit_id,
-                "delivery": self._delivery,
-                "applied_lsn_min": lsn_min,
-                "applied_lsn_max": lsn_max,
-                "source_offsets": {str(d["partition"]): d["offset_max"] for d in lineage},
-                "code_hash": self.code_hash,
-                "snapshot_id": new_snap.version,
-                "per_partition_lineage": lineage,
-                "metrics": metrics,
+            pre_group = (
+                bool(affected_buckets)
+                and os.environ.get("SPARK_GRAFT_PREGROUP", "1") != "0"
+                and (
+                    unit_mode == "mor"
+                    or not self.table._files_overlapping(
+                        snap, affected_buckets
+                    )
+                )
+            )
+            if pre_group:
+                n_parts, group = self.table._write_group(
+                    snap, sorted(set(affected_buckets))
+                )
+                bucket = self.table._bucket_expr(
+                    snap.num_buckets, snap.key_cols
+                )
+                pv = (
+                    valid.withColumn("__bucket", bucket)
+                    .withColumn("__grp", group)
+                    .repartition(n_parts, "__grp")
+                )
+                reduced = lww_reduce(
+                    pv, keys=list(snap.key_cols), simple=True,
+                    simple_via_window=True,
+                    cluster_cols=["__grp", "__bucket"],
+                )
+            else:
+                reduced = lww_reduce(
+                    valid, keys=list(snap.key_cols), simple=True,
+                    simple_via_window=True,
+                )
+        else:
+            winners = valid.groupBy(*snap.key_cols).agg(
+                F.max(F.col("lsn")).alias("__wl")
+            ).persist()
+            if pre_buckets is not None:
+                # mask-supplied buckets: the winners stats job shrinks to
+                # a bare count (primitive buffer, no collect_set)
+                n_keys = winners.count()
+                affected_buckets = pre_buckets
+            else:
+                bucket = self.table._bucket_expr(snap.num_buckets, snap.key_cols)
+                wstats = winners.agg(
+                    F.count(F.lit(1)).alias("n_keys"),
+                    F.collect_set(bucket).alias("buckets"),
+                ).collect()[0]  # bounded-collect: one aggregate row
+                n_keys = wstats["n_keys"]
+                affected_buckets = sorted(wstats["buckets"] or [])
+            reduced = lww_reduce(
+                valid,
+                keys=list(snap.key_cols),
+                broadcast_winners=n_keys <= 1_000_000,
+                winners=winners,
+            )
+
+        source = self._derive_columns(reduced, snap)
+        if unit_mode is None:
+            unit_mode = self._resolve_write_mode(
+                snap, affected_buckets, n_valid
+            )
+        metrics = {
+            "events_in": int(events_in),
+            "invalid_events": int(events_in - n_valid),
+            "write_mode": unit_mode,
+            # retained in the manifest schema for compatibility; always 0
+            # since lww_reduce's primitive-buffer phase-1 made explicit
+            # salting unnecessary (map-side combine collapses hot keys)
+            "hot_keys_salted": 0,
+        }
+        merge_stats: dict = {}
+        new_snap = self._merge_with_retry(
+            source,
+            batch_id=unit_id,
+            lineage=lineage,
+            metrics=metrics,
+            code_hash=self.code_hash,
+            stats_out=merge_stats,
+            # in-order delivery: once this unit commits, every LSN at or
+            # below its max is applied (earlier batches hold only lower
+            # LSNs) — the retention watermark for tombstone compaction.
+            # Scatter delivery gives no such guarantee: watermark holds.
+            advance_watermark_to=(
+                lsn_max if self._delivery == "in_order" else None
+            ),
+            affected_buckets=affected_buckets,
+            # Observation deadlocks inside a foreachBatch callback —
+            # streaming epochs take the explicit-count path
+            use_observation=self._delivery != "stream",
+            delivery=self._delivery,
+            mode=unit_mode,
+            partial_update=self.partial_updates,
+            src_pre_grouped=pre_group,
+            src_num_buckets=snap.num_buckets,
+        )
+        if winners is not None:
+            winners.unpersist()
+        elapsed = max(time.monotonic() - t0, 1e-9)
+        n_red = merge_stats.get("rows", 0)
+        n_del = merge_stats.get("deletes", 0)
+        metrics.update(
+            {
+                "rows_upserted": int(n_red - n_del),
+                "rows_deleted": int(n_del),
+                "dups_dropped": int(n_valid - n_red),
+                "events_per_sec": round(events_in / elapsed, 2),
+                "lag_events": (
+                    None if lag_events is None else int(lag_events - events_in)
+                ),
             }
-            self._write_ckpt(unit_id, manifest)
-            return manifest
-        finally:
-            pass
+        )
+        manifest = {
+            "batch_id": unit_id,
+            "delivery": self._delivery,
+            "applied_lsn_min": lsn_min,
+            "applied_lsn_max": lsn_max,
+            "source_offsets": {str(d["partition"]): d["offset_max"] for d in lineage},
+            "code_hash": self.code_hash,
+            "snapshot_id": new_snap.version,
+            "per_partition_lineage": lineage,
+            "metrics": metrics,
+        }
+        self._write_ckpt(unit_id, manifest)
+        return manifest
 
     # below this batch-rows / rewritten-base-rows ratio, COW write
     # amplification dominates and merge-on-read wins
@@ -889,9 +889,10 @@ class CdcEngine:
         the event column), so a rename_column on e.g. ``lang`` keeps feeding
         the renamed lake column from the event's fixed ``lang`` field."""
         is_data = F.col("op") != "delete"
-        norm = F.when(
-            is_data, normalize_content(F.col("content"), self.use_arrow_normalize)
-        )
+        # normalized in a projection of its own: Catalyst treats the ICU call
+        # as nondeterministic, so it is not re-inlined into the two uses below
+        reduced = reduced.withColumn("__content", F.when(is_data, normalize_content(F.col("content"))))
+        norm = F.col("__content")
         # original (schema v1) name per field id — the event-facing name
         origin_name = {f.field_id: f.name for f in snap.schemas[1].fields}
         base_exprs = {
@@ -1030,8 +1031,8 @@ class CdcEngine:
         return out
 
     def manifests_df(self) -> DataFrame:
-        """Checkpoint manifests as a DataFrame (FIXTURES.md §A3 shape)."""
-        rows = [json.dumps(m) for m in self.manifests()]
+        """Checkpoint manifests as a DataFrame (FIXTURES.md §A3 shape), in
+        batch order. The JSON files are read by the JVM directly."""
         schema = (
             "batch_id bigint, applied_lsn_min bigint, applied_lsn_max bigint,"
             "source_offsets map<string,bigint>, code_hash string, snapshot_id bigint,"
@@ -1041,6 +1042,9 @@ class CdcEngine:
             "rows_deleted:bigint,dups_dropped:bigint,hot_keys_salted:int,"
             "events_per_sec:double,lag_events:bigint>"
         )
-        return self.spark.read.schema(schema).json(
-            self.spark.sparkContext.parallelize(rows or [], 1)
+        if not glob.glob(os.path.join(self._ckpt_dir, "batch-*.json")):
+            return empty_frame(self.spark, T.StructType.fromDDL(schema))
+        return (
+            self.spark.read.schema(schema).option("pathGlobFilter", "batch-*.json")
+            .json(self._ckpt_dir).coalesce(1).sortWithinPartitions("batch_id")
         )

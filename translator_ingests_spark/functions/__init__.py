@@ -1,7 +1,6 @@
 from translator_ingests_spark.functions.content import (
     normalize_content,
-    normalize_content_udf,
     content_digest,
 )
 
-__all__ = ["normalize_content", "normalize_content_udf", "content_digest"]
+__all__ = ["normalize_content", "content_digest"]

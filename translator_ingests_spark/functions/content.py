@@ -1,52 +1,36 @@
-"""Vectorized content plane: normalization + digesting.
+"""Content plane: normalization + digesting, entirely JVM-side.
 
-Per the target invariant, every row of the lake table carries
-``content_sha256 = sha2(normalize(content), 256)`` and replay equality is
-checked per row on that digest. Two rules:
+Every lake row carries ``content_sha256 = sha2(normalize(content), 256)``;
+normalization is Unicode NFC, then ``\\r\\n`` → ``\\n`` and lone ``\\r`` → ``\\n``.
+No Python worker runs: NFC is ICU4J's (``com.ibm.icu.text.Normalizer``,
+shipped with Spark) through ``reflect``, and only on rows where
+``octet_length(c) > length(c)``, i.e. with a multi-byte character — ASCII is
+already NFC. That gate is also the null guard (``compose`` throws on null).
 
-- **Zero per-row Python.** Normalization is a pandas UDF over Arrow batches
-  using vectorized ``pd.Series.str`` ops (the reference streams dict-per-row
-  Python at /root/reference/src/translator_ingest/_ingest_template/_ingest_template.py:99-123 —
-  the one pattern we deliberately do not reproduce).
-- **Digesting stays JVM-side** (``F.sha2`` inside whole-stage codegen) — no
-  Python round-trip at all for the hash.
+ICU4J may implement a newer Unicode than Python's ``unicodedata`` (ICU 77 is
+Unicode 16, Python 3.11's is 14.0). NFC is stable for assigned code points,
+so :func:`normalize_content` equals the :func:`normalize_py` oracle on every
+string of code points the Python side knows as assigned.
 """
 
 from __future__ import annotations
 
 import unicodedata
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 
-# returnType passed as a DataType object (not a DDL string) so importing this
-# module does not require an active SparkContext
-@pandas_udf(T.StringType())
-def normalize_content_udf(s: pd.Series) -> pd.Series:
-    """Arrow-batched content normalization: unicode NFC + \\r\\n|\\r → \\n.
-
-    All ops are vectorized pandas string kernels over the Arrow batch;
-    nulls pass through.
-    """
-    out = s.str.normalize("NFC")
-    out = out.str.replace("\r\n", "\n", regex=False).str.replace("\r", "\n", regex=False)
-    return out
-
-
-def normalize_content(col: Column, use_arrow_udf: bool = True) -> Column:
-    """Normalized content column.
-
-    ``use_arrow_udf=False`` gives a pure-JVM fallback (line endings only — no
-    NFC; correct when the corpus is known-ASCII, e.g. the synthetic log) that
-    keeps the whole plan inside codegen.
-    """
-    if use_arrow_udf:
-        return normalize_content_udf(col)
-    return F.regexp_replace(F.regexp_replace(col, "\r\n", "\n"), "\r", "\n")
+def normalize_content(col: Column) -> Column:
+    """Normalized content column; nulls pass through. Catalyst treats
+    ``reflect`` as nondeterministic: project the result once, then reuse it."""
+    nfc = F.when(
+        F.octet_length(col) > F.length(col),
+        F.reflect(
+            F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), col, F.lit(False)
+        ),
+    ).otherwise(col)
+    return F.regexp_replace(F.regexp_replace(nfc, "\r\n", "\n"), "\r", "\n")
 
 
 def content_digest(col: Column) -> Column:

@@ -81,6 +81,14 @@ _WIDENINGS: dict[str, set[str]] = {
 _IS_DELTA_COL = "__is_delta"
 
 
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """A zero-row frame of ``schema`` from typed null literals: unlike
+    ``createDataFrame([], schema)`` it ships no driver rows to a Python worker."""
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
+
+
 def _lww_fold(df: DataFrame, key_cols: list[str], lsn_col: str) -> DataFrame:
     """Read-time last-writer-wins fold for merge-on-read: one row per key,
     the greatest ``(lsn, base-over-delta)`` survivor. On an LSN tie the BASE
@@ -1014,8 +1022,8 @@ class LakeTable:
         )
 
     # -- read ---------------------------------------------------------------
-    def _bucket_expr(self, num_buckets: int, key_cols: list[str]):
-        return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets)).cast("int")
+    def _bucket_expr(self, num_buckets: int, key_cols: list):  # names or Columns
+        return F.pmod(F.xxhash64(*key_cols), F.lit(num_buckets)).cast("int")
 
     def _write_group(self, snap: "Snapshot", affected: list[int]):
         """The write layout's (n_parts, group expression over ``__bucket``)
@@ -1059,8 +1067,7 @@ class LakeTable:
         ]
         full_schema = T.StructType(current.spark_schema().fields + implicit)
         if not files:
-            df = self.spark.createDataFrame([], full_schema)
-            return df if raw else df.drop(TOMBSTONE_COL, EXTRAS_COL)
+            return empty_frame(self.spark, full_schema if raw else current.spark_schema())
         by_sv: dict[int, list[str]] = {}
         for f in files:
             by_sv.setdefault(f["schema_version"], []).append(self.localize_path(f["path"]))
@@ -1553,13 +1560,13 @@ class LakeTable:
         into a join against ``read()`` for those).
         """
         snap = self.current()
-        key_df = self.spark.createDataFrame(keys, schema=list(snap.key_cols))
-        # driver-side bucket computation must be the JVM expression itself
-        # (xxhash64 has no cheap python twin): one tiny job over |keys| rows
-        kb = key_df.select(
-            self._bucket_expr(snap.num_buckets, snap.key_cols).alias("__b")
-        ).collect()  # bounded-collect: one row per looked-up key
-        buckets = sorted({r["__b"] for r in kb})
+        types = {f.name: _SPARK_TYPES[f.type] for f in snap.schema.fields}
+        # the writer's xxhash64 rule over literals of the key columns' lake
+        # types (an int hashes unlike the same long); on a one-row local
+        # relation the array folds to a constant: no Spark job or worker
+        lits = [[F.lit(v).try_cast(types[c]) for c, v in zip(snap.key_cols, kt)] for kt in keys]
+        ids = F.array(*[self._bucket_expr(snap.num_buckets, kl) for kl in lits])
+        buckets = sorted(set(self.spark.sql("VALUES (0)").select(ids).head()[0]))
         df = self.read_buckets(buckets)
         cond = F.lit(False)
         for kt in keys:
@@ -1687,6 +1694,7 @@ class LakeTable:
         mode: str = "cow",
         partial_update: bool = False,
         src_pre_grouped: bool = False,
+        src_num_buckets: int | None = None,
     ) -> Snapshot:
         """Idempotent last-writer-wins MERGE of a pre-reduced batch.
 
@@ -1727,6 +1735,10 @@ class LakeTable:
         ``cdc.reduce.partial_lww_reduce``). COW only: the merge-on-read
         fold is whole-row, so a partial delta would clobber unset columns
         at read time — requesting both raises.
+
+        ``src_num_buckets``: the bucket count the source's ``__bucket`` /
+        ``__grp`` and ``affected_buckets`` were computed under; after a
+        concurrent ``rebucket`` they are recomputed under the head's count.
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown merge mode {mode!r}")
@@ -1750,15 +1762,16 @@ class LakeTable:
             source = source.filter(F.col(lsn_col) > F.lit(snap.low_watermark))
 
         # a pre-grouped source (apply loop rode the write-group exchange)
-        # already carries __bucket (and __grp); recomputing would discard
-        # the ordering/partitioning lineage the pre-grouped write relies on
-        if "__bucket" in source.columns:
-            src = source
-        else:
-            src = source.withColumn(
-                "__bucket", self._bucket_expr(snap.num_buckets, keys)
-            )
-        src_pre_grouped = src_pre_grouped and "__grp" in src.columns
+        # carries __bucket/__grp: recomputing them would discard the lineage
+        # the pre-grouped write relies on, unless another bucket count made
+        # them (and the bucket set) stale
+        if src_num_buckets not in (None, snap.num_buckets):
+            affected_buckets = None
+        src_pre_grouped = (src_pre_grouped and "__grp" in source.columns
+                           and src_num_buckets == snap.num_buckets)
+        src = source if src_pre_grouped else source.drop("__bucket", "__grp").withColumn(
+            "__bucket", self._bucket_expr(snap.num_buckets, keys)
+        )
         # affected buckets: tiny driver-side list (≤ num_buckets), this is
         # the bucket-pruning step that keeps merge cost O(batch), not
         # O(table). Callers that already know the batch's bucket set (the
@@ -2054,9 +2067,9 @@ class LakeTable:
         if pre_grouped:
             # the caller already partitioned ``result`` by this exact
             # mapping (apply loop, via _write_group) and its reduce window
-            # sorted it by (__grp, __bucket, keys, ...) — no exchange here;
-            # the explicit sort is a redundant prefix of the window's and
-            # is removed by the planner.
+            # sorted it by (__grp, __bucket, keys, ...) — no exchange here.
+            # The planner drops this sort as already satisfied (test_plans.py)
+            # unless an operator in between hides the ordering.
             out = (
                 result.sortWithinPartitions("__grp", "__bucket", *keys)
                 .drop("__grp")

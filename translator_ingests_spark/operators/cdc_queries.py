@@ -150,9 +150,6 @@ def _replayed_engine(
     marker = os.path.join(root, "_COMPLETE")
     kw = dict(
         num_buckets=16,
-        # content is ASCII-deterministic here; JVM normalization keeps
-        # the whole merge plan in codegen (Arrow path covered by tests)
-        use_arrow_normalize=False,
         write_mode=write_mode,
         # MOR: keep the deltas PENDING (no fold-back compaction) so the
         # query reads through the LWW fold path — that is the behavior

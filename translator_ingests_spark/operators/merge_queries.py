@@ -47,7 +47,6 @@ def _merged_root(spark: SparkSession, sf_dir: str) -> str:
             spark,
             os.path.join(root, f"src{i}"),
             num_buckets=16,
-            use_arrow_normalize=False,
         )
         eng.apply_log(
             log.filter(F.pmod(F.col("lsn"), F.lit(_N_SOURCES)) == i), n_batches=2

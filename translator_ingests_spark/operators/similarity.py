@@ -427,9 +427,9 @@ def ann_ivf_flat(spark: SparkSession, sf_dir: str, nprobe: int = _IVF_NPROBE) ->
     reading nprobe/K of the data); here the tiny (q_id, cell) pairs
     broadcast onto the corpus scan, which is the same plan shape.
     """
-    # centroids come off the RAW scan (footer-count + pushed isin filter —
-    # the fan-out would make the count pay a shuffle); only the scored
-    # corpus fans out
+    # both the centroids (footer-count + pushed isin filter) and the scored
+    # corpus come off the RAW scan: this path does not fan out, so the
+    # Arrow assignment and scoring run on the scan's own splits
     cent_rows = _ivf_centroids(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
     return _ann_ivf_arrow(
         spark.read.parquet(f"{sf_dir}/embeddings.parquet"), cent_rows, nprobe
