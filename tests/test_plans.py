@@ -160,3 +160,32 @@ def test_mor_unit_rides_one_exchange_and_one_sort(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_PREGROUP", "0")
     _, unpre = run(tmp_path / "plain")
     assert unpre == blobs
+
+
+def test_cow_unit_plans_bulk_one_exchange_live_target_two(spark, tmp_path,
+                                                          monkeypatch):
+    """COW units, captured at the parquet write: a bulk unit onto an empty
+    table rides the pre-grouped single exchange; a unit with a live target
+    rides two — the reduce's key shuffle and the merge's bucket-group
+    shuffle of source ∪ target."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from translator_ingests_spark.cdc.apply import CdcEngine
+
+    real_parquet = DataFrameWriter.parquet
+    plans = []
+
+    def capture(self, path, *a, **k):
+        plans.append(plan_of(self._df))
+        return real_parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    eng = CdcEngine(spark, str(tmp_path / "t"), num_buckets=8,
+                    auto_compact_every=None)
+    eng.apply_log(generate_event_log(spark, 1000, seed=3), n_batches=2)
+    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+
+    assert len(plans) == 2
+    bulk, live = plans
+    assert bulk.count("Exchange") == 1, bulk
+    assert live.count("Exchange") == 2, live

@@ -43,6 +43,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # snappy stays the session default for non-lake writes (materialized
+        # event logs, bench and tool outputs): they keep their bytes and the
+        # cheaper encode. Lake data files get zstd from the table's own
+        # writer options (LakeTable._parquet_write_options).
         .config("spark.sql.parquet.compression.codec", "snappy")
         # parquet row-group size for everything this engine WRITES. Scan
         # parallelism of a parquet file is bounded by its row-group count
