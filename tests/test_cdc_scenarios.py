@@ -187,9 +187,10 @@ def test_crash_resume_byte_identical(spark, tmp_path):
 
 
 def test_hot_key_knobs_do_not_change_results(spark, tmp_path):
-    """Skew config is legacy: the decomposed LWW reduce needs no salting
-    (see cdc/reduce.py), so a skewed log applies identically under any
-    hot-key-threshold setting and reports hot_keys_salted == 0."""
+    """A skewed log needs no salting (see cdc/reduce.py): it applies
+    identically through the decomposed reduce (winners aggregation +
+    candidate join, forced by ``small_batch_events=0``) and the small-batch
+    window reduce."""
     events_df = generate_event_log(spark, 3000, seed=13, n_repos=10,
                                    n_mega_repos=1, hot_fraction=0.6,
                                    paths_per_repo=5)
@@ -197,12 +198,10 @@ def test_hot_key_knobs_do_not_change_results(spark, tmp_path):
     df = lambda: spark.createDataFrame(rows, EVENT_SCHEMA)  # noqa: E731
 
     eng_a = CdcEngine(spark, str(tmp_path / "a"), num_buckets=4,
-                      hot_key_threshold=1, hot_sample_fraction=1.0)
+                      small_batch_events=0)
     eng_a.apply_log(df(), events_per_batch=1000)
-    assert all(m["metrics"]["hot_keys_salted"] == 0 for m in eng_a.manifests())
 
-    eng_b = CdcEngine(spark, str(tmp_path / "b"), num_buckets=4,
-                      hot_key_threshold=10**12)
+    eng_b = CdcEngine(spark, str(tmp_path / "b"), num_buckets=4)
     eng_b.apply_log(df(), events_per_batch=1000)
 
     s1 = {(r["repo"], r["path"]): r.asDict() for r in eng_a.final_state().collect()}

@@ -3,7 +3,7 @@ candidate join → tiny tie-break) makes hot keys structurally benign — the
 only full-batch aggregation has a primitive buffer whose map-side combine
 collapses a hot key to one row per input partition before any shuffle. No
 salting, no detection job; a pathologically skewed batch must still apply
-correctly and report hot_keys_salted == 0."""
+correctly."""
 
 from translator_ingests_spark.cdc import CdcEngine, EVENT_SCHEMA
 
@@ -21,18 +21,12 @@ def _events(n, repo="mega"):
 
 
 def test_skewed_batch_applies_without_salting(spark, tmp_path):
-    eng = CdcEngine(
-        spark,
-        str(tmp_path / "cdc"),
-        num_buckets=4,
-        hot_key_threshold=100,  # legacy knob — must have no effect
-    )
+    eng = CdcEngine(spark, str(tmp_path / "cdc"), num_buckets=4)
     eng.init_table()
     # 200 events, ALL in one repo — far past any hot threshold
     batch = spark.createDataFrame(_events(200), EVENT_SCHEMA)
     m = eng._apply_data_unit(batch, unit_id=0, lag_events=200)
     assert m is not None
-    assert m["metrics"]["hot_keys_salted"] == 0
     assert eng.final_state().count() == 200
 
 

@@ -1,13 +1,13 @@
-"""Round-6 optimization guards: the fused (union + window LWW) COW merge
-and the window-shaped simple reduce must be row-identical to the join /
-max_by shapes they replaced — on batches exercising every merge arm:
-strictly-newer updates, stale updates, LSN ties (target must win), deletes
-of existing/missing keys, re-inserts over tombstones, and empty targets.
+"""Merge guards: the COW merge (one union + row_number window) must land
+the expected raw state on a batch exercising every merge arm — strictly-newer
+updates, stale updates, LSN ties (target must win), deletes of existing and
+missing keys, re-inserts over tombstones, and empty targets — and the
+window-shaped simple reduce must be row-identical to the max_by shape.
 """
 
 from __future__ import annotations
 
-import os
+import hashlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,12 +29,14 @@ SEED = [
     ev(2, "insert", "r", "b", "c2", "py", "vb"),
     ev(3, "insert", "r", "c", "c3", "py", "vc"),
     ev(4, "delete", "r", "d", None, None, None),  # tombstone from day one
+    ev(5, "insert", "r", "e", "c7", "py", "ve"),
 ]
 
 # second batch: every merge decision arm
 UPDATES = [
     ev(10, "update", "r", "a", "c4", "py", "va2"),   # newer → source wins
-    ev(2, "update", "r", "b", "c9", "py", "stale"),  # tie LSN → target wins
+    ev(2, "update", "r", "b", "c9", "py", "stale"),  # loses in-batch to lsn 12
+    ev(5, "update", "r", "e", "c9", "py", "tie"),    # tie LSN → target wins
     ev(1, "update", "r", "c", "c8", "py", "older"),  # stale → target wins
     ev(11, "insert", "r", "d", "c5", "py", "vd"),    # re-insert over tombstone
     ev(12, "delete", "r", "b", None, None, None),    # delete existing
@@ -43,36 +45,41 @@ UPDATES = [
 ]
 
 
-def _final(spark, root, fuse: str):
-    os.environ["SPARK_GRAFT_MERGE_FUSE"] = fuse
-    try:
-        eng = CdcEngine(spark, root, num_buckets=8)
-        eng.apply_log(spark.createDataFrame(SEED, EVENT_SCHEMA),
-                      events_per_batch=100)
-        eng.apply_log(spark.createDataFrame(UPDATES, EVENT_SCHEMA),
-                      events_per_batch=100)
-        rows = eng.table.read_raw().collect()
-        return sorted(
-            tuple(r[c] for c in ("repo", "path", "commit", "lang", "content",
-                                 "content_sha256", "last_lsn", "__tombstone"))
-            for r in rows
-        )
-    finally:
-        os.environ.pop("SPARK_GRAFT_MERGE_FUSE", None)
+def _sha(text):
+    return hashlib.sha256(text.encode()).hexdigest()
 
 
-def test_fused_merge_matches_join_merge(spark, tmp_path):
-    fused = _final(spark, str(tmp_path / "fuse"), "1")
-    joined = _final(spark, str(tmp_path / "join"), "0")
-    assert fused == joined
-    # and the arms actually happened: tie kept target, delete tombstoned,
-    # re-insert resurrected
-    by_key = {(r[0], r[1]): r for r in fused}
-    assert by_key[("r", "b")][7] is True          # deleted
-    assert by_key[("r", "c")][4] == "vc"          # stale update rejected
-    assert by_key[("r", "d")][4] == "vd"          # re-insert over tombstone
-    assert by_key[("r", "zz")][7] is True         # delete-missing tombstone
-    assert by_key[("r", "a")][6] == 10            # newer update applied
+# (repo, path, commit, lang, content, content_sha256, last_lsn, __tombstone)
+EXPECTED = sorted([
+    ("r", "a", "c4", "py", "va2", _sha("va2"), 10, False),  # newer applied
+    ("r", "b", None, None, None, None, 12, True),           # deleted
+    ("r", "c", "c3", "py", "vc", _sha("vc"), 3, False),     # stale rejected
+    ("r", "d", "c5", "py", "vd", _sha("vd"), 11, False),    # re-insert
+    ("r", "e", "c7", "py", "ve", _sha("ve"), 5, False),     # tie keeps target
+    ("r", "new", "c6", "py", "vn", _sha("vn"), 14, False),  # plain insert
+    ("r", "zz", None, None, None, None, 13, True),          # delete missing
+])
+
+
+def _final(spark, root, scatter: bool):
+    # scatter delivery holds the retention watermark, so the stale and tied
+    # updates reach the merge instead of being dropped by the watermark guard
+    kw = dict(n_batches=1, scatter_delivery=True) if scatter else dict(
+        events_per_batch=100)
+    eng = CdcEngine(spark, root, num_buckets=8)
+    eng.apply_log(spark.createDataFrame(SEED, EVENT_SCHEMA), **kw)
+    eng.apply_log(spark.createDataFrame(UPDATES, EVENT_SCHEMA), **kw)
+    rows = eng.table.read_raw().collect()
+    return sorted(
+        tuple(r[c] for c in ("repo", "path", "commit", "lang", "content",
+                             "content_sha256", "last_lsn", "__tombstone"))
+        for r in rows
+    )
+
+
+def test_cow_merge_arms_land_expected_raw_state(spark, tmp_path):
+    assert _final(spark, str(tmp_path / "ord"), scatter=False) == EXPECTED
+    assert _final(spark, str(tmp_path / "sc"), scatter=True) == EXPECTED
 
 
 @pytest.mark.parametrize("dup", [False, True])

@@ -1,7 +1,9 @@
 """Partial-update streams (Paimon partial-update merge-engine analog):
 a non-delete event's NULL value column means "no change" — the engine
 assembles each key's row column-wise (last non-null writer), within a
-batch via partial_lww_reduce and across batches via the coalescing merge.
+batch via partial_lww_reduce and across batches via the merge's window
+fill (a winning patch takes the target's value for each column it leaves
+null).
 """
 
 import hashlib
@@ -78,6 +80,22 @@ def test_delete_kills_columns_below_it(spark, tmp_path):
     assert row["last_lsn"] == 8
 
 
+def test_in_batch_delete_kills_target_columns(spark, tmp_path):
+    # the delete below the patch is in the batch, not in the table: the
+    # merge must not fill the patch's unset columns from the live target
+    eng = mk(spark, tmp_path)
+    apply(eng, spark, [ev(1, "insert", "r", "a", "c1", "py", "v1")])
+    apply(eng, spark, [
+        ev(5, "delete", "r", "a"),
+        ev(8, "update", "r", "a", lang="go"),
+    ])
+    row = state(eng)[("r", "a")]
+    assert row["lang"] == "go"
+    assert row["content"] is None and row["content_sha256"] is None
+    assert row["commit"] is None
+    assert row["last_lsn"] == 8
+
+
 def test_stale_patch_cannot_resurrect_deleted_key(spark, tmp_path):
     eng = mk(spark, tmp_path)
     apply(eng, spark, [
@@ -86,6 +104,34 @@ def test_stale_patch_cannot_resurrect_deleted_key(spark, tmp_path):
     ])
     apply(eng, spark, [ev(3, "update", "r", "a", lang="go")])  # stale patch
     assert ("r", "a") not in state(eng)
+
+
+def test_stale_patches_in_mixed_tail_keep_target(spark, tmp_path):
+    # scatter delivery holds the watermark, so the stale tail reaches the
+    # merge. The table does not record a's delete at lsn 4: only the live
+    # target's lsn 5 keeps the redelivered lsn-3 patch from bringing back
+    # the lang it set before that delete.
+    eng = mk(spark, tmp_path)
+    once = dict(n_batches=1, scatter_delivery=True)
+    apply(eng, spark, [
+        ev(1, "insert", "r", "a", "c1", "py", "v1"),
+        ev(4, "delete", "r", "a"),
+        ev(5, "update", "r", "a", content="v5"),
+        ev(2, "insert", "r", "c", "c2", None, "vc"),
+    ], **once)
+    apply(eng, spark, [
+        ev(3, "update", "r", "a", lang="go"),       # below the live lsn 5
+        ev(1, "update", "r", "c", lang="rs"),       # stale
+        ev(2, "update", "r", "c", commit="tie"),    # ties the target's lsn
+        ev(6, "insert", "r", "b", "c6", "py", "v6"),
+    ], **once)
+    got = state(eng)
+    a, c = got[("r", "a")], got[("r", "c")]
+    assert a["lang"] is None and a["commit"] is None
+    assert a["content"] == "v5" and a["last_lsn"] == 5
+    assert c["lang"] is None
+    assert c["commit"] == "c2" and c["last_lsn"] == 2   # a tie keeps the target
+    assert got[("r", "b")]["last_lsn"] == 6
 
 
 def test_delete_as_final_event_wins(spark, tmp_path):

@@ -5,6 +5,7 @@ path collects rows to the driver."""
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from translator_ingests_spark.cdc.generator import generate_event_log
@@ -70,19 +71,6 @@ def test_lww_reduce_no_full_data_sort_or_object_agg(spark):
     assert all("max_by" in l for l in sort_aggs)
 
 
-def test_lww_reduce_hot_keys_arg_is_plan_noop(spark):
-    log = generate_event_log(spark, 1000, seed=3)
-    import re
-
-    strip_ids = lambda p: re.sub(r"#\d+|plan_id=\d+", "#", p)  # noqa: E731
-    p1 = strip_ids(plan_of(lww_reduce(log, keys=["repo", "path"])))
-    p2 = strip_ids(plan_of(lww_reduce(log, keys=["repo", "path"],
-                                      hot_keys=["org/mega-repo-000"],
-                                      salt_buckets=8)))
-    assert p1 == p2
-    assert "__salt" not in p2
-
-
 def test_reader_filter_pushdown_counts_as_scan_filter(spark):
     df = (
         spark.read.parquet(f"{SF}/lineitem.parquet")
@@ -127,47 +115,57 @@ def test_mor_unit_rides_one_exchange_and_one_sort(spark, tmp_path, monkeypatch):
     """A pre-grouped MOR unit: the batch is shuffled once by the write's
     bucket-group key and sorted once, by the reduce window — the write's
     declared layout sort is a prefix of that ordering and is elided. Its
-    delta files are byte-identical to the ones the key-shuffled reduce plus
-    repartition-and-sort write path produces."""
+    delta files are byte-identical to the ones a direct MOR merge of the
+    same key-shuffled window reduce writes through the merge's own
+    repartition-and-sort."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from translator_ingests_spark.cdc.apply import CdcEngine
 
     real_parquet = DataFrameWriter.parquet
     log = generate_event_log(spark, 1000, seed=3)
+    plans = []
 
-    def run(root):
-        plans = []
+    def capture(self, path, *a, **k):
+        plans.append(plan_of(self._df))
+        return real_parquet(self, path, *a, **k)
 
-        def capture(self, path, *a, **k):
-            plans.append(plan_of(self._df))
-            return real_parquet(self, path, *a, **k)
-
-        monkeypatch.setattr(DataFrameWriter, "parquet", capture)
-        eng = CdcEngine(spark, str(root), num_buckets=8, write_mode="mor")
-        eng.apply_log(log, n_batches=1)
-        monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+    def blobs(eng):
         files = eng.table.current().files
         assert files and all(f.get("delta") for f in files)
-        blobs = sorted(open(f["path"], "rb").read() for f in files)
-        return plans, blobs
+        return sorted(open(f["path"], "rb").read() for f in files)
 
-    plans, blobs = run(tmp_path / "pre")
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    eng = CdcEngine(spark, str(tmp_path / "pre"), num_buckets=8,
+                    write_mode="mor")
+    eng.apply_log(log, n_batches=1)
+    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
     assert len(plans) == 1
     assert plans[0].count("Exchange") == 1
     assert plans[0].count("Sort [") == 1, plans[0]
 
-    monkeypatch.setenv("SPARK_GRAFT_PREGROUP", "0")
-    _, unpre = run(tmp_path / "plain")
-    assert unpre == blobs
+    ref = CdcEngine(spark, str(tmp_path / "plain"), num_buckets=8,
+                    write_mode="mor")
+    ref.init_table()
+    snap = ref.table.head()
+    valid = log.filter(F.col("repo").isNotNull() & F.col("path").isNotNull()
+                       & F.col("lsn").isNotNull())
+    reduced = lww_reduce(valid, keys=list(snap.key_cols), simple=True,
+                         simple_via_window=True)
+    ref.table.merge(ref._derive_columns(reduced, snap), batch_id=0,
+                    mode="mor")
+    assert blobs(ref) == blobs(eng)
 
 
+@pytest.mark.parametrize("partial", [False, True], ids=["whole_row", "partial"])
 def test_cow_unit_plans_bulk_one_exchange_live_target_two(spark, tmp_path,
-                                                          monkeypatch):
-    """COW units, captured at the parquet write: a bulk unit onto an empty
-    table rides the pre-grouped single exchange; a unit with a live target
-    rides two — the reduce's key shuffle and the merge's bucket-group
-    shuffle of source ∪ target."""
+                                                          monkeypatch, partial):
+    """COW units, captured at the parquet write. Whole-row: a bulk unit
+    onto an empty table rides the pre-grouped single exchange; a unit with
+    a live target rides two — the reduce's key shuffle and the merge's
+    bucket-group shuffle of source ∪ target. Partial-update units run the
+    same merge behind their column-wise reduce's shuffle: two exchanges
+    each, with no join."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from translator_ingests_spark.cdc.apply import CdcEngine
@@ -181,11 +179,12 @@ def test_cow_unit_plans_bulk_one_exchange_live_target_two(spark, tmp_path,
 
     monkeypatch.setattr(DataFrameWriter, "parquet", capture)
     eng = CdcEngine(spark, str(tmp_path / "t"), num_buckets=8,
-                    auto_compact_every=None)
+                    auto_compact_every=None, partial_updates=partial)
     eng.apply_log(generate_event_log(spark, 1000, seed=3), n_batches=2)
     monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
 
     assert len(plans) == 2
     bulk, live = plans
-    assert bulk.count("Exchange") == 1, bulk
+    assert bulk.count("Exchange") == (2 if partial else 1), bulk
     assert live.count("Exchange") == 2, live
+    assert "Join" not in live, live

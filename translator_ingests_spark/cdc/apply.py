@@ -93,8 +93,7 @@ class CdcEngine:
     """Applies an ordered change-event log to one lake table, exactly once.
     Content is normalized JVM-side (:func:`normalize_content`, ICU4J NFC on
     non-ASCII rows); no Python worker runs on the apply, lookup or read
-    paths. ``use_arrow_normalize``, ``hot_key_threshold``,
-    ``hot_sample_fraction`` and ``salt_buckets`` are accepted and ignored."""
+    paths. ``use_arrow_normalize`` is accepted and ignored."""
 
     def __init__(
         self,
@@ -102,9 +101,6 @@ class CdcEngine:
         root: str,
         num_buckets: int = 16,
         use_arrow_normalize: bool = True,
-        hot_key_threshold: int = 50_000,
-        hot_sample_fraction: float = 0.05,
-        salt_buckets: int = 32,
         auto_compact_every: int | None = 16,
         auto_expire_every: int | None = None,
         expire_keep_last: int = 16,
@@ -733,7 +729,6 @@ class CdcEngine:
             )
             pre_group = (
                 bool(affected_buckets)
-                and os.environ.get("SPARK_GRAFT_PREGROUP", "1") != "0"
                 and (
                     unit_mode == "mor"
                     or not self.table._files_overlapping(
@@ -796,10 +791,6 @@ class CdcEngine:
             "events_in": int(events_in),
             "invalid_events": int(events_in - n_valid),
             "write_mode": unit_mode,
-            # retained in the manifest schema for compatibility; always 0
-            # since lww_reduce's primitive-buffer phase-1 made explicit
-            # salting unnecessary (map-side combine collapses hot keys)
-            "hot_keys_salted": 0,
         }
         merge_stats: dict = {}
         new_snap = self._merge_with_retry(
@@ -1039,7 +1030,7 @@ class CdcEngine:
             "per_partition_lineage array<struct<partition:int,offset_min:bigint,"
             "offset_max:bigint,lsn_min:bigint,lsn_max:bigint,rows:bigint>>,"
             "metrics struct<events_in:bigint,invalid_events:bigint,rows_upserted:bigint,"
-            "rows_deleted:bigint,dups_dropped:bigint,hot_keys_salted:int,"
+            "rows_deleted:bigint,dups_dropped:bigint,"
             "events_per_sec:double,lag_events:bigint>"
         )
         if not glob.glob(os.path.join(self._ckpt_dir, "batch-*.json")):

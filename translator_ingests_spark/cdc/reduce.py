@@ -13,7 +13,7 @@ that structurally benign: the only aggregation over the full batch is a
 ``max(lsn)`` with a primitive buffer, whose map-side partial aggregation
 collapses a hot key to one row per input partition before the shuffle —
 explicit salting (phase-1 group on ``(key, salt)``, phase-2 re-reduce) is
-therefore no longer needed and the ``hot_keys`` argument is advisory-only.
+therefore not needed.
 The candidate join skew is handled by AQE skew-join splitting (reference
 analog: hot-edge capping at semmeddb.py:200-233, except we must preserve
 the winner exactly, so reduce, never cap).
@@ -37,36 +37,11 @@ def _op_rank(op_col: str):
     )
 
 
-def detect_hot_keys(
-    df: DataFrame,
-    key_col: str = "repo",
-    sample_fraction: float = 0.05,
-    hot_threshold: int = 10_000,
-    seed: int = 7,
-) -> list[str]:
-    """Estimate which ``key_col`` values are hot via a cheap sample.
-
-    Returns values whose *estimated* full count exceeds ``hot_threshold``.
-    The sample aggregation is tiny (distinct repos), so the driver collect is
-    safe at any scale.
-    """
-    if sample_fraction >= 1.0:
-        counts = df.groupBy(key_col).count()
-        scale = 1.0
-    else:
-        counts = df.sample(fraction=sample_fraction, seed=seed).groupBy(key_col).count()
-        scale = 1.0 / sample_fraction
-    rows = counts.filter(F.col("count") * scale > hot_threshold).select(key_col).collect()  # bounded-collect: <= rows/hot_threshold keys by construction (skew head only)
-    return sorted(r[key_col] for r in rows if r[key_col] is not None)
-
-
 def lww_reduce(
     df: DataFrame,
     keys: list[str],
     lsn_col: str = "lsn",
     op_col: str = "op",
-    hot_keys: list[str] | None = None,
-    salt_buckets: int = 32,
     broadcast_winners: bool | None = None,
     winners: DataFrame | None = None,
     simple: bool = False,
@@ -109,11 +84,7 @@ def lww_reduce(
     it once per batch to take its exact count for the broadcast gate, and
     passing it here lets the merge job reuse the cached rows instead of
     re-aggregating the events.
-
-    ``hot_keys``/``salt_buckets`` are retained for API stability but no
-    longer alter the plan: phase 1's map-side combine is the salting.
     """
-    del hot_keys, salt_buckets  # structurally unnecessary, see docstring
     cols = df.columns
     # xxhash64 doesn't accept MapType columns — exclude them from the tie hash
     from pyspark.sql.types import MapType
@@ -251,7 +222,7 @@ def partial_lww_reduce(
         F.when(surv_is_del, F.lit("delete")).otherwise(F.lit("update")).alias(op_col)
     )
     # carried to the merge: a delete BELOW the survivor killed the key's
-    # whole prior row, so the coalescing merge must NOT resurrect target
+    # whole prior row, so the merge's window fill must NOT resurrect target
     # columns (partial mode's cross-batch contract: per-key in-order
     # delivery, so any in-batch delete out-ranks the stored row)
     out.append(F.when(~surv_is_del, F.col("__del_lsn")).alias("__del_lsn"))

@@ -1751,9 +1751,13 @@ class LakeTable:
         ``partial_update=True`` (Paimon partial-update analog): a matched
         update's NULL value column keeps the TARGET's value instead of
         nulling it — the source row is a sparse column patch (reduced by
-        ``cdc.reduce.partial_lww_reduce``). COW only: the merge-on-read
-        fold is whole-row, so a partial delta would clobber unset columns
-        at read time — requesting both raises.
+        ``cdc.reduce.partial_lww_reduce``, whose non-null ``__del_lsn``
+        marks an in-batch delete below the patch: then the patch's own
+        columns are all that survives). It runs on the same union+window
+        merge as whole-row units; the window fills the winning patch's null
+        columns from the target row. COW only: the merge-on-read fold is
+        whole-row, so a partial delta would clobber unset columns at read
+        time — requesting both raises.
 
         ``src_num_buckets``: the bucket count the source's ``__bucket`` /
         ``__grp`` and ``affected_buckets`` were computed under; after a
@@ -1834,28 +1838,34 @@ class LakeTable:
             else F.lit(None).cast(extras_map_t)
         )
 
+        # the batch aligned to the raw row layout: values nulled and
+        # tombstone=true for deletes, so a delete out-ranks stale updates
+        # exactly like a stored tombstone. Partial mode carries the
+        # reducer's in-batch kill marker ``__del_lsn`` to the window fill.
+        is_del_src = F.col(op_col) == F.lit("delete")
+        s_rows = src.select(
+            *[F.col(k) for k in keys],
+            *[
+                F.when(is_del_src, F.lit(None)).otherwise(F.col(c)).alias(c)
+                for c in value_cols
+            ],
+            F.col(lsn_col).alias(lsn_target),
+            is_del_src.alias(TOMBSTONE_COL),
+            F.when(is_del_src, F.lit(None).cast(extras_map_t))
+            .otherwise(s_extras)
+            .alias(EXTRAS_COL),
+            F.col("__bucket"),
+            *([F.col("__grp")] if src_pre_grouped else []),
+            *([(F.col("__del_lsn") if "__del_lsn" in src.columns
+                else F.lit(None).cast("long")).alias("__del_lsn")]
+              if partial_update else []),
+        )
+
         if mode == "mor":
-            # merge-on-read: the reduced batch BECOMES the write — aligned to
-            # the raw row layout (values nulled + tombstone=true for deletes,
-            # so a delta delete out-ranks stale updates exactly like a base
-            # tombstone). No target read, no join, no base rewrite.
-            is_del_src = F.col(op_col) == F.lit("delete")
-            result = src.select(
-                *[F.col(k) for k in keys],
-                *[
-                    F.when(is_del_src, F.lit(None)).otherwise(F.col(c)).alias(c)
-                    for c in value_cols
-                ],
-                F.col(lsn_col).alias(lsn_target),
-                is_del_src.alias(TOMBSTONE_COL),
-                F.when(is_del_src, F.lit(None).cast(extras_map_t))
-                .otherwise(s_extras)
-                .alias(EXTRAS_COL),
-                F.col("__bucket"),
-                *([F.col("__grp")] if src_pre_grouped else []),
-            )
+            # merge-on-read: the aligned batch BECOMES the write. No target
+            # read, no window, no base rewrite.
             return self._finish_merge(
-                snap, result, affected, list(snap.files), batch_id, lineage,
+                snap, s_rows, affected, list(snap.files), batch_id, lineage,
                 metrics, code_hash, stats_out, advance_watermark_to, delivery,
                 obs, src, op_col,
                 None if obs is not None else merge_counts, delta=True,
@@ -1875,156 +1885,48 @@ class LakeTable:
             affected_files = self._files_overlapping(snap, affected)
         affected_paths = {f["path"] for f in affected_files}
         untouched_files = [f for f in snap.files if f["path"] not in affected_paths]
-        tgt = self._net_raw(snap, affected_files)
 
-        if not partial_update and os.environ.get("SPARK_GRAFT_MERGE_FUSE", "1") != "0":
-            # FUSED COW MERGE (whole-row LWW): the full-outer join is
-            # equivalent to a per-key rank-1 selection over source ∪ target
-            # ordered by (lsn DESC, is_target DESC) — the source row wins
-            # iff its LSN is STRICTLY greater (is_target breaks the tie
-            # toward the target, exactly the join's ``s_lsn > t_lsn``; a
-            # null target LSN sorts below any source LSN, the join's
-            # ``t_lsn IS NULL`` arm). Fusing removes the join and one full
-            # table-size exchange: both branches shuffle ONCE, by the
-            # write's bucket-group key, and the row_number window runs on
-            # top of that exchange inside ``_finish_merge``, whose sort by
-            # (group, bucket, keys, ...) is precisely the write order — the
-            # plan is scan ∪ scan → exchange → window → write.
-            # Source deletes become tombstone rows (values nulled) BEFORE
-            # the window, so a winning delete lands exactly like the join's
-            # is_del branch; a losing one vanishes with its row.
-            is_del_src = F.col(op_col) == F.lit("delete")
-            s_rows = src.select(
-                *[F.col(k) for k in keys],
-                *[
-                    F.when(is_del_src, F.lit(None)).otherwise(F.col(c)).alias(c)
-                    for c in value_cols
-                ],
-                F.col(lsn_col).alias(lsn_target),
-                is_del_src.alias(TOMBSTONE_COL),
-                F.when(is_del_src, F.lit(None).cast(extras_map_t))
-                .otherwise(s_extras)
-                .alias(EXTRAS_COL),
-                F.col("__bucket"),
-                *([F.col("__grp")] if src_pre_grouped else []),
-                F.lit(0).alias("__is_tgt"),
-            )
-            if not affected_files:
-                # EMPTY-TARGET fast path (initial/bulk load): the source is
-                # already one row per key, so the LWW resolution window has
-                # nothing to resolve — write the aligned source rows
-                # directly (one exchange + layout sort, no window pass; a
-                # pre-grouped source skips even that exchange)
-                return self._finish_merge(
-                    snap, s_rows.drop("__is_tgt"), affected, untouched_files,
-                    batch_id, lineage, metrics, code_hash, stats_out,
-                    advance_watermark_to, delivery, obs, src, op_col,
-                    None if obs is not None else merge_counts, delta=False,
-                    pre_grouped=src_pre_grouped,
-                )
-            if src_pre_grouped:
-                # non-empty target: the union re-shuffles anyway, and the
-                # target branch has no __grp — drop the source's
-                s_rows = s_rows.drop("__grp")
-            t_rows = tgt.select(
-                *[F.col(k) for k in keys],
-                *[F.col(c) for c in value_cols],
-                F.col(lsn_target),
-                F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)).alias(TOMBSTONE_COL),
-                F.col(EXTRAS_COL),
-                self._bucket_expr(snap.num_buckets, keys).alias("__bucket"),
-                F.lit(1).alias("__is_tgt"),
-            )
+        if not affected_files:
+            # EMPTY-TARGET fast path (initial/bulk load): the source is
+            # already one row per key, so the LWW resolution window has
+            # nothing to resolve — write the aligned source rows directly
+            # (one exchange + layout sort, no window pass; a pre-grouped
+            # source skips even that exchange)
             return self._finish_merge(
-                snap, s_rows.unionByName(t_rows), affected, untouched_files,
+                snap, s_rows.drop("__del_lsn"), affected, untouched_files,
                 batch_id, lineage, metrics, code_hash, stats_out,
                 advance_watermark_to, delivery, obs, src, op_col,
                 None if obs is not None else merge_counts, delta=False,
-                fuse_lww=True,
+                pre_grouped=src_pre_grouped,
             )
-
-        # partial mode: a non-null __del_lsn means an in-batch delete killed
-        # the key's prior row — the coalesce below must not resurrect it
-        s_dl = (
-            F.col("__del_lsn") if partial_update and "__del_lsn" in src.columns
-            else F.lit(None).cast("long")
+        # COW MERGE: a per-key rank-1 selection over source ∪ target ordered
+        # by (lsn DESC, is_target DESC) — the source row wins iff its LSN is
+        # STRICTLY greater (is_target breaks the tie toward the target; a
+        # null target LSN sorts below any source LSN). Both branches shuffle
+        # ONCE, by the write's bucket-group key, and the row_number window
+        # runs on top of that exchange inside ``_finish_merge``, whose sort
+        # by (group, bucket, keys, ...) is precisely the write order — the
+        # plan is scan ∪ scan → exchange → window → write. A source delete
+        # is already a tombstone row, so a winning delete lands as one and a
+        # losing one vanishes with its row. The non-empty target re-shuffles
+        # anyway and has no __grp, so a pre-grouped source drops its own.
+        s_rows = s_rows.drop("__grp").withColumn("__is_tgt", F.lit(0))
+        t_rows = self._net_raw(snap, affected_files).select(
+            *[F.col(k) for k in keys],
+            *[F.col(c) for c in value_cols],
+            F.col(lsn_target),
+            F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)).alias(TOMBSTONE_COL),
+            F.col(EXTRAS_COL),
+            self._bucket_expr(snap.num_buckets, keys).alias("__bucket"),
+            *([F.lit(None).cast("long").alias("__del_lsn")] if partial_update else []),
+            F.lit(1).alias("__is_tgt"),
         )
-        s = src.select(
-            *[F.col(k).alias(f"__s_{k}") for k in keys],
-            *[F.col(c).alias(f"__s_{c}") for c in value_cols],
-            F.col(op_col).alias("__s_op"),
-            F.col(lsn_col).alias("__s_lsn"),
-            s_extras.alias("__s_extras"),
-            s_dl.alias("__s_dl"),
-        )
-        t = tgt.select(
-            *[F.col(k).alias(f"__t_{k}") for k in keys],
-            *[F.col(c).alias(f"__t_{c}") for c in value_cols],
-            F.col(lsn_target).alias("__t_lsn"),
-            F.col(TOMBSTONE_COL).alias("__t_tomb"),
-            F.col(EXTRAS_COL).alias("__t_extras"),
-        )
-
-        cond = None
-        for k in keys:
-            c = F.col(f"__s_{k}").eqNullSafe(F.col(f"__t_{k}"))
-            cond = c if cond is None else (cond & c)
-        joined = t.join(s, on=cond, how="full_outer")
-
-        take_src = F.col("__s_op").isNotNull() & (
-            F.col("__t_lsn").isNull() | (F.col("__s_lsn") > F.col("__t_lsn"))
-        )
-        is_del = take_src & (F.col("__s_op") == F.lit("delete"))
-
-        out_cols = []
-        for k in keys:
-            out_cols.append(F.coalesce(F.col(f"__s_{k}"), F.col(f"__t_{k}")).alias(k))
-        for c in value_cols:
-            if partial_update:
-                # sparse patch: an unset (null) source column keeps the
-                # target's value; a matched tombstone target contributes
-                # null, so a partial re-insert after a delete carries only
-                # the columns the patch actually set. An in-batch delete
-                # below the survivor (__s_dl) killed the prior row — then
-                # the patch's own columns are ALL that survives.
-                taken = F.when(
-                    F.col("__s_dl").isNotNull(), F.col(f"__s_{c}")
-                ).otherwise(F.coalesce(F.col(f"__s_{c}"), F.col(f"__t_{c}")))
-            else:
-                taken = F.col(f"__s_{c}")
-            out_cols.append(
-                F.when(is_del, F.lit(None))
-                .when(take_src, taken)
-                .otherwise(F.col(f"__t_{c}"))
-                .alias(c)
-            )
-        out_cols.append(
-            F.when(take_src, F.col("__s_lsn")).otherwise(F.col("__t_lsn")).alias(lsn_target)
-        )
-        out_cols.append(
-            F.when(is_del, F.lit(True))
-            .when(take_src, F.lit(False))
-            .otherwise(F.coalesce(F.col("__t_tomb"), F.lit(False)))
-            .alias(TOMBSTONE_COL)
-        )
-        s_ex = (
-            F.when(F.col("__s_dl").isNotNull(), F.col("__s_extras"))
-            .otherwise(F.coalesce(F.col("__s_extras"), F.col("__t_extras")))
-            if partial_update else F.col("__s_extras")
-        )
-        out_cols.append(
-            F.when(is_del, F.lit(None).cast(extras_map_t))
-            .when(take_src, s_ex)
-            .otherwise(F.col("__t_extras"))
-            .alias(EXTRAS_COL)
-        )
-        result = joined.select(*out_cols)
-        result = result.withColumn("__bucket", self._bucket_expr(snap.num_buckets, keys))
         return self._finish_merge(
-            snap, result, affected, untouched_files, batch_id, lineage,
-            metrics, code_hash, stats_out, advance_watermark_to, delivery,
-            obs, src, op_col,
+            snap, s_rows.unionByName(t_rows), affected, untouched_files,
+            batch_id, lineage, metrics, code_hash, stats_out,
+            advance_watermark_to, delivery, obs, src, op_col,
             None if obs is not None else merge_counts, delta=False,
+            fuse_lww=True,
         )
 
     def _finish_merge(
@@ -2060,7 +1962,10 @@ class LakeTable:
         alone already co-locates every key (``HashPartitioning(__grp)``
         satisfies the window's clustering requirement; Catalyst inserts no
         second exchange), and the window's sort doubles as the write's
-        layout sort.
+        layout sort. A ``__del_lsn`` column (partial-update mode: set on
+        source rows, null on target rows) turns on the window fill: a
+        winning non-tombstone source row whose ``__del_lsn`` is null takes
+        the target's value for each null value column and ``__extras``.
 
         ``pre_grouped=True``: the caller already partitioned ``result`` by
         this exact mapping (and sorted it — the apply loop's clustered
@@ -2070,7 +1975,7 @@ class LakeTable:
         out_dir = self._data_dir(new_version)
         # partition the write by a DETERMINISTIC bucket-group id — unlike
         # repartitionByRange this needs no sampling job (and therefore no
-        # cache of the full-outer join to avoid double compute): __bucket's
+        # cache of the merge input to avoid double compute): __bucket's
         # domain is known ([0, num_buckets)), so floor-dividing it into
         # n_parts contiguous groups gives each output file a tight bucket
         # range for manifest pruning. Written as a PLAIN parquet write — the
@@ -2104,21 +2009,40 @@ class LakeTable:
             # than the join it replaced). row_number's sort
             # (__grp, __bucket, keys, lsn DESC, __is_tgt DESC) costs one
             # pass, picks the strictly-greater-LSN source (target wins ties
-            # via __is_tgt; a null target LSN sorts last under DESC,
-            # matching the join's ``t_lsn IS NULL`` arm) — and IS the
-            # write's layout sort: __grp is constant within each output
+            # via __is_tgt; a null target LSN sorts last under DESC) — and IS
+            # the write's layout sort: __grp is constant within each output
             # partition, so the explicit sortWithinPartitions below is
             # subsumed (prefix match) and removed as redundant.
             w = W.partitionBy("__grp", "__bucket", *keys).orderBy(
                 F.desc(lsnc), F.desc("__is_tgt")
             )
+            cols = [F.col(c) for c in result.columns]
+            if "__del_lsn" in result.columns:
+                # partial update: a winning live source patch with no
+                # in-batch delete below it keeps the target's value for every
+                # column it leaves null. The target's value comes from a
+                # whole-partition frame over the same window spec, so it
+                # rides the same Window node (no extra sort or exchange).
+                whole = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+                fill = ((F.col("__is_tgt") == 0) & ~F.col(TOMBSTONE_COL)
+                        & F.col("__del_lsn").isNull())
+                fixed = {*keys, lsnc, TOMBSTONE_COL, "__bucket", "__is_tgt",
+                         "__del_lsn"}
+                cols = [
+                    F.col(c) if c in fixed else F.when(fill, F.coalesce(
+                        F.col(c),
+                        F.first(F.when(F.col("__is_tgt") == 1, F.col(c)),
+                                ignorenulls=True).over(whole),
+                    )).otherwise(F.col(c)).alias(c)
+                    for c in result.columns
+                ]
             out = (
                 result.withColumn("__grp", group)
                 .repartition(n_parts, "__grp")
-                .withColumn("__rn", F.row_number().over(w))
+                .select(*cols, "__grp", F.row_number().over(w).alias("__rn"))
                 .where(F.col("__rn") == 1)
                 .sortWithinPartitions("__grp", "__bucket", *keys)
-                .drop("__grp", "__is_tgt", "__rn")
+                .drop("__grp", "__is_tgt", "__rn", "__del_lsn")
             )
         else:
             # secondary sort by key: parquet row-group min/max stats on the

@@ -20,12 +20,9 @@ from pyspark.sql import DataFrame
 
 def fan_out(df: DataFrame, key: str) -> DataFrame:
     """Repartition ``df`` by ``key`` to the default parallelism iff its scan
-    yields fewer than half that many partitions. ``SPARK_GRAFT_FANOUT=0``
-    disables it globally (A/B and single-core-input deployments)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_FANOUT", "1") == "0":
-        return df
+    yields fewer than half that many partitions. Every caller passes a bare
+    ``spark.read.parquet`` scan, so the ``getNumPartitions`` probe plans
+    only that file scan (splits come from the file listing), not a query."""
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(2, par // 2):
