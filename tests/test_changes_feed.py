@@ -2,6 +2,8 @@
 snapshots, bucket-pruned, with COW carry-over rows cancelled and compaction
 noise excluded."""
 
+from lake_fixtures import merge_by_bucket_range
+
 from translator_ingests_spark.lake import LakeSchema, LakeTable
 from translator_ingests_spark.lake.maintenance import compact
 
@@ -104,8 +106,8 @@ def test_point_lookup_prunes_to_key_buckets(spark, tmp_path):
     returns exactly the visible rows for those keys."""
     t = make_table(spark, str(tmp_path / "lake"), num_buckets=8)
     rows = [("r1", f"f{i}.py", f"c{i}", "insert", i) for i in range(40)]
-    t.merge(src_df(spark, rows), 0)
-    t.merge(src_df(spark, [("r1", "f3.py", None, "delete", 100)]), 1)
+    nxt = merge_by_bucket_range(t, src_df(spark, rows), 4)  # four files
+    t.merge(src_df(spark, [("r1", "f3.py", None, "delete", 100)]), nxt)
 
     got = {
         (r["repo"], r["path"]): (r["content"], r["last_lsn"])

@@ -16,6 +16,7 @@ attempt — the real conflict path, no sleeps, no threads.
 import os
 
 import pytest
+from lake_fixtures import apply_by_bucket_range
 from pyspark.sql import functions as F
 
 from translator_ingests_spark.cdc import CdcEngine, EVENT_SCHEMA
@@ -34,12 +35,13 @@ def ev(lsn, op, repo, path, content):
     }
 
 
-def seed(spark, tmp_path, n=24):
+def seed(spark, tmp_path, n=24, n_ranges=1):
+    """``n`` inserted keys in ``n_ranges`` files over disjoint bucket
+    ranges."""
     eng = CdcEngine(spark, str(tmp_path / "t"), num_buckets=8,
                     auto_compact_every=None)
     events = [ev(i, "insert", f"r{i % 6}", f"p{i}", f"v{i}") for i in range(n)]
-    eng.apply_log(spark.createDataFrame(events, EVENT_SCHEMA),
-                  events_per_batch=n)
+    apply_by_bucket_range(eng, events, n_ranges)
     return eng
 
 
@@ -86,7 +88,7 @@ def rows(t):
 
 
 def test_layout_commit_rebases_over_disjoint_merge(spark, tmp_path):
-    eng = seed(spark, tmp_path)
+    eng = seed(spark, tmp_path, n_ranges=4)
     t = eng.table
     base = t.head()  # compaction's (stale) base
 
@@ -187,7 +189,7 @@ def test_concurrent_schema_changes_conflict(spark, tmp_path, monkeypatch):
 
 
 def test_merge_rebases_over_disjoint_layout_commit(spark, tmp_path, monkeypatch):
-    eng = seed(spark, tmp_path)
+    eng = seed(spark, tmp_path, n_ranges=4)
     t = eng.table
     base = t.head()
 

@@ -11,6 +11,7 @@ a delta when the cursor lags the state table."""
 import os
 
 import pytest
+from lake_fixtures import merge_by_bucket_range
 from pyspark.sql import functions as F
 
 from translator_ingests_spark.cdc.apply import CdcEngine, EVENT_SCHEMA
@@ -480,14 +481,11 @@ def test_multi_column_group_max_refresh_prunes_source_files(spark, tmp_path):
         for b, p in layout[repo]:
             lsn += 1
             batch.append((repo, p, "py" if b % 2 else "go", 10 * lsn, "insert", lsn))
-    src.merge(
-        spark.createDataFrame(
-            batch, "repo string, path string, lang string, size long, op string, lsn long"
-        ),
-        0,
-    )
-    # one file per bucket (8 affected buckets, salted group write) — each
-    # file single-repo by construction
+    nxt = merge_by_bucket_range(src, spark.createDataFrame(
+        batch, "repo string, path string, lang string, size long, op string, lsn long"
+    ), 4)
+    # one file per repo's bucket pair (one commit per pair) — each file
+    # single-repo by construction
     files = src.current().files
     assert len(files) >= 4
     agg = IncrementalAggregate(
@@ -504,7 +502,7 @@ def test_multi_column_group_max_refresh_prunes_source_files(spark, tmp_path):
             [("r1", tp, "go" if tb % 2 else "py", 99999, "update", 10_000)],
             "repo string, path string, lang string, size long, op string, lsn long",
         ),
-        1,
+        nxt,
     )
     calls = []
     real_read_where = scan_mod.read_where

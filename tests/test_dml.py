@@ -2,6 +2,7 @@
 probe-then-targeted-rewrite, tombstone semantics, LWW interaction with
 later CDC events, merge-on-read interplay, and file-level pruning."""
 
+from lake_fixtures import apply_by_bucket_range
 from pyspark.sql import functions as F
 
 from translator_ingests_spark.cdc import CdcEngine, EVENT_SCHEMA
@@ -17,7 +18,8 @@ def ev(lsn, op, repo=None, path=None, commit=None, lang=None, content=None):
     }
 
 
-def seed(spark, tmp_path, **kw):
+def seed(spark, tmp_path, n_ranges=1, **kw):
+    """12 keys in ``n_ranges`` files over disjoint bucket ranges."""
     eng = CdcEngine(spark, str(tmp_path / "t"), num_buckets=8,
                     auto_compact_every=None, **kw)
     events = [
@@ -25,7 +27,7 @@ def seed(spark, tmp_path, **kw):
            "py" if i % 3 else "java", f"v{i}")
         for i in range(12)
     ]
-    eng.apply_log(spark.createDataFrame(events, EVENT_SCHEMA), events_per_batch=100)
+    apply_by_bucket_range(eng, events, n_ranges)
     return eng
 
 
@@ -62,7 +64,7 @@ def test_delete_where_lww_against_cdc_events(spark, tmp_path):
 
 
 def test_delete_where_prunes_untouched_files(spark, tmp_path):
-    eng = seed(spark, tmp_path)
+    eng = seed(spark, tmp_path, n_ranges=4)
     before = {f["path"] for f in eng.table.current().files}
     # one specific key → only files holding it are rewritten
     snap = delete_where(

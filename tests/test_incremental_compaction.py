@@ -4,6 +4,7 @@ O(table) rewrite. Selection is manifest-metadata-only (the per-file
 ``has_tombstones`` footer stat); clean files are spliced through the new
 manifest byte-identical, and a tombstone-free table is a complete no-op."""
 
+from lake_fixtures import merge_by_bucket_range
 from pyspark.sql import functions as F
 
 from translator_ingests_spark.cdc import CdcEngine, EVENT_SCHEMA
@@ -39,10 +40,11 @@ def state(table):
 
 def test_incremental_compact_touches_only_tombstone_files(spark, tmp_path):
     t = make_table(spark, str(tmp_path / "lake"), num_buckets=8)
-    # broad insert batch spreads keys over every bucket, multiple files
-    t.merge(src_df(spark, [("r1", f"f{i}.py", f"c{i}", "insert", i) for i in range(60)]), 0)
+    # broad insert spreads keys over every bucket, in four bucket-range files
+    nxt = merge_by_bucket_range(
+        t, src_df(spark, [("r1", f"f{i}.py", f"c{i}", "insert", i) for i in range(60)]), 4)
     # one delete → only its bucket's file(s) get rewritten and flagged
-    t.merge(src_df(spark, [("r1", "f7.py", None, "delete", 100)]), 1,
+    t.merge(src_df(spark, [("r1", "f7.py", None, "delete", 100)]), nxt,
             advance_watermark_to=100)
 
     snap = t.current()

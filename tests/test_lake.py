@@ -2,6 +2,7 @@
 bucketed COW merge semantics, field-id schema evolution, batch idempotency."""
 
 import pytest
+from lake_fixtures import merge_by_bucket_range
 from pyspark.sql import functions as F
 
 from translator_ingests_spark.lake import LakeSchema, LakeTable
@@ -91,12 +92,12 @@ def test_batch_idempotency_guard(spark, tmp_table_root):
 def test_file_pruning_rewrites_only_affected(spark, tmp_table_root):
     t = make_table(spark, tmp_table_root, num_buckets=8)
     rows = [(f"r{i}", f"p{i}", "v", "insert", i) for i in range(50)]
-    t.merge(src_df(spark, rows), 0)
+    nxt = merge_by_bucket_range(t, src_df(spark, rows), 4)  # four files
     snap0 = t.current()
     files0 = {f["path"] for f in snap0.files}
     assert len(files0) > 1  # multiple bucket-range files
     # single-key update touches only the file(s) covering its bucket
-    t.merge(src_df(spark, [("r7", "p7", "v2", "update", 100)]), 1)
+    t.merge(src_df(spark, [("r7", "p7", "v2", "update", 100)]), nxt)
     snap1 = t.current()
     files1 = {f["path"] for f in snap1.files}
     kept = files0 & files1

@@ -7,6 +7,7 @@ import os
 import tarfile
 
 import pytest
+from lake_fixtures import merge_by_bucket_range
 
 from translator_ingests_spark.lake import LakeSchema, LakeTable
 from translator_ingests_spark.lake.maintenance import compact, expire_snapshots
@@ -28,17 +29,21 @@ SCHEMA = LakeSchema.from_names(
 )
 
 
-def _table_with_history(spark, root, n_batches=4):
+def _table_with_history(spark, root, n_batches=4, per_bucket=False):
+    """``per_bucket``: commit each batch as one merge per bucket, so the
+    table keeps a file per bucket instead of one small file."""
     t = LakeTable.create(spark, root, SCHEMA, ["repo", "path"], "last_lsn", 4)
+    nxt = 0
     for b in range(n_batches):
         rows = [(f"r{i}", f"p{i}", f"v{b}", "insert" if b == 0 else "update",
                  b * 100 + i) for i in range(20)]
-        t.merge(
-            spark.createDataFrame(
-                rows, "repo string, path string, content string, op string, lsn long"
-            ),
-            b,
+        df = spark.createDataFrame(
+            rows, "repo string, path string, content string, op string, lsn long"
         )
+        if per_bucket:
+            nxt = merge_by_bucket_range(t, df, 4, nxt)
+        else:
+            t.merge(df, b)
     return t
 
 
@@ -58,7 +63,8 @@ def test_expire_snapshots_gc(spark, tmp_path):
 
 
 def test_compact_reduces_files_same_state(spark, tmp_path):
-    t = _table_with_history(spark, str(tmp_path / "t"))
+    t = _table_with_history(spark, str(tmp_path / "t"), n_batches=2,
+                            per_bucket=True)
     state_before = {(r["repo"], r["path"]): r["content"] for r in t.read().collect()}
     n_files_before = len(t.current().files)
     compact(t, target_files=2)

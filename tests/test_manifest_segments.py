@@ -14,6 +14,7 @@ import json
 import os
 
 import pytest
+from lake_fixtures import merge_by_bucket_range
 
 import translator_ingests_spark.lake.table as lt
 from translator_ingests_spark.lake import LakeSchema, LakeTable
@@ -65,13 +66,13 @@ def test_untouched_segments_reused_across_commits(spark, tmp_path, monkeypatch):
     # can only break the segment covering its bucket
     monkeypatch.setattr(lt, "SEGMENT_MAX_FILES", 2)
     t = mk(spark, str(tmp_path / "l"))
-    t.merge(wide_batch(spark, 0), batch_id=0)
+    nxt = merge_by_bucket_range(t, wide_batch(spark, 0), 8)  # a file per bucket
     v1 = t.current().version
     segs1 = set(seg_names(t, v1))
     assert len(segs1) > 2
 
     # single-key update → merge rewrites one bucket's file(s)
-    t.merge(src(spark, [("r1", "a", "patched", "update", 10_000)]), batch_id=1)
+    t.merge(src(spark, [("r1", "a", "patched", "update", 10_000)]), batch_id=nxt)
     v2 = t.current().version
     segs2 = set(seg_names(t, v2))
     reused = segs1 & segs2
@@ -98,7 +99,7 @@ def test_current_is_lazy_and_pruned_read_opens_only_needed_segments(
 ):
     monkeypatch.setattr(lt, "SEGMENT_MAX_FILES", 2)
     t = mk(spark, str(tmp_path / "l"))
-    t.merge(wide_batch(spark, 0), batch_id=0)
+    merge_by_bucket_range(t, wide_batch(spark, 0), 4)  # four files
 
     t2 = LakeTable(spark, str(tmp_path / "l"))
     snap = t2.current()

@@ -10,6 +10,7 @@ merge writes O(batch) delta files and leaves every base file untouched.
 import hashlib
 
 import pytest
+from lake_fixtures import apply_by_bucket_range
 from pyspark.sql import functions as F
 
 from translator_ingests_spark.cdc import CdcEngine, EVENT_SCHEMA, generate_event_log
@@ -238,8 +239,10 @@ def test_read_with_deltas_folds_only_touched_buckets(spark, tmp_path):
     # files must flow through a plain (non-aggregated) union branch
     eng = CdcEngine(spark, str(tmp_path / "t"), num_buckets=64,
                     write_mode="mor", auto_compact_every=None)
+    # four delta files over disjoint bucket ranges, folded into four
+    # range-partitioned base files
     first = [ev(i, "insert", "r", f"p{i}", "c", "py", f"v{i}") for i in range(64)]
-    eng.apply_log(spark.createDataFrame(first, EVENT_SCHEMA), events_per_batch=100)
+    apply_by_bucket_range(eng, first, 4)
     compact_incremental(eng.table)  # all base now
     one = [ev(200, "update", "r", "p7", "cx", "py", "fresh")]
     eng.apply_log(spark.createDataFrame(one, EVENT_SCHEMA), events_per_batch=100)

@@ -3,7 +3,9 @@
 Reads only the parquet footers of the files in the table's current
 snapshot (no data pages, no Spark session) and prints the file count
 (delta files among them), footer bytes, codecs, and compressed and
-uncompressed bytes per column, in total and per row.
+uncompressed bytes per column, in total and per row. Then, per commit
+directory that still holds live files, the file count and the min, median
+and max bytes per file: the write layout at a glance.
 
 Usage: python tools/lake_bytes.py <table root>
 """
@@ -11,6 +13,7 @@ Usage: python tools/lake_bytes.py <table root>
 from __future__ import annotations
 
 import os
+import statistics
 import sys
 from collections import Counter, defaultdict
 
@@ -45,6 +48,16 @@ def footer_summary(paths: list[str]) -> dict:
             "codecs": dict(codecs), "columns": dict(cols)}
 
 
+def files_per_commit(files: list[dict]) -> dict[str, tuple[int, list[int]]]:
+    """Commit directory -> (delta files, sorted file sizes) over ``files``."""
+    out: dict[str, tuple[int, list[int]]] = {}
+    for f in files:
+        d = os.path.basename(os.path.dirname(f["path"]))
+        n_delta, sizes = out.get(d, (0, []))
+        out[d] = (n_delta + bool(f.get("delta")), sizes + [os.path.getsize(f["path"])])
+    return {d: (n, sorted(s)) for d, (n, s) in sorted(out.items())}
+
+
 def main(argv: list[str]) -> int:
     if len(argv) != 1:
         print(__doc__.strip().splitlines()[-1], file=sys.stderr)
@@ -75,6 +88,11 @@ def main(argv: list[str]) -> int:
               f"{per_row(comp):>9.1f}{per_row(raw):>11.1f}")
     print(f"{'(all columns)':<24}{total[0]:>14}{total[1]:>14}"
           f"{per_row(total[0]):>9.1f}{per_row(total[1]):>11.1f}")
+    print(f"{'commit dir':<32}{'files':>6}{'delta':>6}"
+          f"{'min B':>10}{'median B':>10}{'max B':>10}")
+    for d, (n_delta, sizes) in files_per_commit(list(snap.files)).items():
+        print(f"{d:<32}{len(sizes):>6}{n_delta:>6}{sizes[0]:>10}"
+              f"{int(statistics.median(sizes)):>10}{sizes[-1]:>10}")
     return 0
 
 

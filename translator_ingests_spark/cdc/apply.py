@@ -717,7 +717,7 @@ class CdcEngine:
             # whole pipeline — reduce, derive, layout write — can ride
             # ONE exchange: partition the batch by the write's
             # bucket-group mapping up front, run the LWW window
-            # clustered on (__grp, __bucket, keys) (no further
+            # clustered on (__bucket, __grp, keys) (no further
             # exchange: __grp is a function of the keys), and let the
             # merge skip its repartition — the reduce window's sort IS
             # the write sort. COW units with a live target keep the
@@ -737,21 +737,18 @@ class CdcEngine:
                 )
             )
             if pre_group:
-                n_parts, group = self.table._write_group(
-                    snap, sorted(set(affected_buckets))
-                )
                 bucket = self.table._bucket_expr(
                     snap.num_buckets, snap.key_cols
                 )
                 pv = (
                     valid.withColumn("__bucket", bucket)
-                    .withColumn("__grp", group)
-                    .repartition(n_parts, "__grp")
+                    .withColumn("__grp", self.table._write_group(snap))
+                    .repartition("__grp")
                 )
                 reduced = lww_reduce(
                     pv, keys=list(snap.key_cols), simple=True,
                     simple_via_window=True,
-                    cluster_cols=["__grp", "__bucket"],
+                    cluster_cols=["__bucket", "__grp"],
                 )
             else:
                 reduced = lww_reduce(

@@ -188,13 +188,14 @@ def partial_lww_reduce(
       are dead (the delete killed the row; a later partial update
       re-creates it with only the columns it actually set).
 
-    Plan: ONE hash aggregation — ``max_by(col, when(col set, lsn))`` plus a
+    Plan: ONE aggregation — ``max_by(col, when(col set, lsn))`` plus a
     per-column writer-LSN max and the delete-LSN max, then a pure
     projection applies the delete gate. String-valued ``max_by`` buffers
-    demote the pass to ObjectHashAggregate (partial/map-side merge still
-    applies); that is the stated cost of the opt-in partial mode — the
-    default whole-row stream keeps the decomposed primitive-buffer plan of
-    :func:`lww_reduce`.
+    make it plan as a SortAggregate: a full ``Sort`` of the batch by the
+    keys under the partial (map-side) aggregate, the exchange, then a
+    second full ``Sort`` under the final aggregate. Those two sorts are the
+    stated cost of the opt-in partial mode — the default whole-row stream
+    keeps the window and decomposed plans of :func:`lww_reduce`.
     """
     value_cols = [c for c in df.columns if c not in {*keys, lsn_col, op_col}]
     is_del = F.col(op_col) == F.lit("delete")

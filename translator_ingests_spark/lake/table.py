@@ -508,7 +508,7 @@ def _file_stats_from_footer(path: str) -> dict | None:
 
 # n_parts -> salts such that pmod(F.hash(salt_g), n_parts) == g: lets a
 # repartition place each bucket group in exactly one shuffle partition.
-# One tiny driver job per distinct n_parts per process, then cached.
+# One tiny driver job per shuffle-partition count per process, then cached.
 _SALT_CACHE: dict[int, list[int] | None] = {}
 
 
@@ -1044,20 +1044,25 @@ class LakeTable:
     def _bucket_expr(self, num_buckets: int, key_cols: list):  # names or Columns
         return F.pmod(F.xxhash64(*key_cols), F.lit(num_buckets)).cast("int")
 
-    def _write_group(self, snap: "Snapshot", affected: list[int]):
-        """The write layout's (n_parts, group expression over ``__bucket``)
-        — the deterministic bucket-group → shuffle-partition mapping
-        ``_finish_merge`` partitions every commit by. Exposed so the apply
-        loop can pre-partition a batch by the SAME mapping and let the
-        whole unit (reduce → derive → write) ride one exchange."""
-        par = self.spark.sparkContext.defaultParallelism
-        n_parts = max(1, min(len(affected), par))
+    def _write_group(self, snap: "Snapshot"):
+        """The write layout's group expression over ``__bucket``: bucket
+        group *g* (``n`` contiguous bucket ranges, ``n`` = the session's
+        shuffle-partition count) hashes to shuffle partition *g* of a
+        count-free ``repartition("__grp")``. AQE's partition coalescer merges
+        only adjacent partitions, so each written file still covers one
+        contiguous bucket range, and the file count follows the bytes the
+        commit shuffles: one file below ~1 MiB, up to one per shuffle
+        partition (``get_spark`` sets one per core) for a large commit.
+        Exposed so the apply loop can pre-partition a batch by the SAME
+        mapping and let the whole unit (reduce → derive → write) ride one
+        exchange."""
+        n_parts = self.spark._jsparkSession.sessionState().conf().numShufflePartitions()
         group = F.floor(F.col("__bucket") * n_parts / snap.num_buckets).cast("int")
         salts = _partition_salts(self.spark, n_parts)
         if salts is not None:
             salt_arr = F.array(*[F.lit(s) for s in salts])
             group = F.element_at(salt_arr, group + 1)
-        return n_parts, group.cast("int")
+        return group.cast("int")
 
     def _read_files(
         self, snap: Snapshot, files: list[dict], raw: bool = False
@@ -1956,7 +1961,7 @@ class LakeTable:
 
         ``fuse_lww=True``: ``result`` is the source ∪ target union (with
         ``__is_tgt``) and the per-key LWW resolution itself runs HERE, as a
-        rank-1 ``row_number`` window over ``(__grp, __bucket, keys)``
+        rank-1 ``row_number`` window over ``(__bucket, __grp, keys)``
         directly on top of the write repartition — ``__grp`` is a
         deterministic function of the keys, so hash-partitioning by it
         alone already co-locates every key (``HashPartitioning(__grp)``
@@ -1977,25 +1982,30 @@ class LakeTable:
         # repartitionByRange this needs no sampling job (and therefore no
         # cache of the merge input to avoid double compute): __bucket's
         # domain is known ([0, num_buckets)), so floor-dividing it into
-        # n_parts contiguous groups gives each output file a tight bucket
-        # range for manifest pruning. Written as a PLAIN parquet write — the
+        # contiguous groups gives each output file a tight bucket range for
+        # manifest pruning. Written as a PLAIN parquet write — the
         # dynamic-partition (partitionBy) commit path is ~10× slower for
         # many small partitions and serializes in the committer. Sort within
         # partitions keeps bucket ids RLE-cheap and row groups clustered.
-        # file count ∝ cluster parallelism, not bucket count — 64 tiny files
-        # per commit just multiply task-scheduling and footer costs.
+        # The file count follows the shuffled bytes: the count-free
+        # repartition lets AQE coalesce adjacent groups, so a small commit
+        # writes one file instead of one tiny file per core (each one more
+        # footer to store and one more path to list on every read). A
+        # coalesced partition holds several groups, so every sort leads
+        # with __bucket: ordered by __grp first, a file's rows would follow
+        # the salt values, not the buckets.
         # (group→partition mapping via precomputed salts: plain
-        # repartition(n, group) would hash-collide groups — ~1/e of writers
+        # repartition(group) would hash-collide groups — ~1/e of writers
         # idle, files spanning unrelated bucket ranges.)
-        n_parts, group = self._write_group(snap, affected)
+        group = self._write_group(snap)
         if pre_grouped:
             # the caller already partitioned ``result`` by this exact
             # mapping (apply loop, via _write_group) and its reduce window
-            # sorted it by (__grp, __bucket, keys, ...) — no exchange here.
+            # sorted it by (__bucket, __grp, keys, ...) — no exchange here.
             # The planner drops this sort as already satisfied (test_plans.py)
             # unless an operator in between hides the ordering.
             out = (
-                result.sortWithinPartitions("__grp", "__bucket", *keys)
+                result.sortWithinPartitions("__bucket", "__grp", *keys)
                 .drop("__grp")
             )
         elif fuse_lww:
@@ -2007,13 +2017,14 @@ class LakeTable:
             # degenerates to a buffer-churning SortAggregate (the exact
             # plan shape cdc/reduce.py decomposed away — measured slower
             # than the join it replaced). row_number's sort
-            # (__grp, __bucket, keys, lsn DESC, __is_tgt DESC) costs one
+            # (__bucket, __grp, keys, lsn DESC, __is_tgt DESC) costs one
             # pass, picks the strictly-greater-LSN source (target wins ties
             # via __is_tgt; a null target LSN sorts last under DESC) — and IS
-            # the write's layout sort: __grp is constant within each output
-            # partition, so the explicit sortWithinPartitions below is
-            # subsumed (prefix match) and removed as redundant.
-            w = W.partitionBy("__grp", "__bucket", *keys).orderBy(
+            # the write's layout sort: the explicit sortWithinPartitions
+            # below is subsumed (prefix match) and removed as redundant.
+            # HashPartitioning(__grp) satisfies the window's clustering, so
+            # no second exchange either.
+            w = W.partitionBy("__bucket", "__grp", *keys).orderBy(
                 F.desc(lsnc), F.desc("__is_tgt")
             )
             cols = [F.col(c) for c in result.columns]
@@ -2038,10 +2049,10 @@ class LakeTable:
                 ]
             out = (
                 result.withColumn("__grp", group)
-                .repartition(n_parts, "__grp")
+                .repartition("__grp")
                 .select(*cols, "__grp", F.row_number().over(w).alias("__rn"))
                 .where(F.col("__rn") == 1)
-                .sortWithinPartitions("__grp", "__bucket", *keys)
+                .sortWithinPartitions("__bucket", "__grp", *keys)
                 .drop("__grp", "__is_tgt", "__rn", "__del_lsn")
             )
         else:
@@ -2050,7 +2061,7 @@ class LakeTable:
             # (point lookups) skip row groups inside each bucket file
             out = (
                 result.withColumn("__grp", group)
-                .repartition(n_parts, "__grp")
+                .repartition("__grp")
                 .drop("__grp")
                 .sortWithinPartitions("__bucket", *keys)
             )
