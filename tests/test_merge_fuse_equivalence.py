@@ -2,7 +2,8 @@
 the expected raw state on a batch exercising every merge arm — strictly-newer
 updates, stale updates, LSN ties (target must win), deletes of existing and
 missing keys, re-inserts over tombstones, and empty targets — and the
-window-shaped simple reduce must be row-identical to the max_by shape.
+window resolving raw events must be row-identical to a merge of the batch
+pre-reduced by the max_by reduce.
 """
 
 from __future__ import annotations
@@ -83,7 +84,11 @@ def test_cow_merge_arms_land_expected_raw_state(spark, tmp_path):
 
 
 @pytest.mark.parametrize("dup", [False, True])
-def test_simple_reduce_window_matches_maxby(spark, dup):
+def test_simple_reduce_window_matches_maxby(spark, tmp_path, dup):
+    """The merge window resolving the raw events lands the same raw rows as
+    a merge of the batch pre-reduced by the standalone max_by reduce — same
+    total order (lsn, op rank, tie hash), so same-LSN ties and exact
+    redeliveries pick the same survivor."""
     rows = SEED + UPDATES
     if dup:
         rows = rows + rows  # exact redelivery: tie-hash path must agree
@@ -91,10 +96,14 @@ def test_simple_reduce_window_matches_maxby(spark, dup):
         F.col("repo").isNotNull() & F.col("path").isNotNull()
         & F.col("lsn").isNotNull()
     )
-    a = lww_reduce(df, keys=["repo", "path"], simple=True)
-    b = lww_reduce(df, keys=["repo", "path"], simple=True,
-                   simple_via_window=True)
-    key = lambda r: (r["repo"], r["path"])  # noqa: E731
-    ra = sorted((tuple(r) for r in a.collect()), key=lambda t: (t[2], t[3]))
-    rb = sorted((tuple(r) for r in b.collect()), key=lambda t: (t[2], t[3]))
-    assert ra == rb
+
+    def merged(sub, events):
+        eng = CdcEngine(spark, str(tmp_path / sub), num_buckets=8)
+        eng.init_table()
+        snap = eng.table.head()
+        eng.table.merge(eng._derive_columns(events, snap), batch_id=0,
+                        winner_cols=eng._content_cols(snap))
+        return sorted(tuple(r) for r in eng.table.read_raw().collect())
+
+    assert merged("maxby", lww_reduce(df, keys=["repo", "path"], simple=True)) \
+        == merged("window", df)

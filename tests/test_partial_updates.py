@@ -1,9 +1,9 @@
 """Partial-update streams (Paimon partial-update merge-engine analog):
 a non-delete event's NULL value column means "no change" — the engine
-assembles each key's row column-wise (last non-null writer), within a
-batch via partial_lww_reduce and across batches via the merge's window
-fill (a winning patch takes the target's value for each column it leaves
-null).
+assembles each key's row column-wise (last non-null writer) in the merge's
+one window, within a batch and across batches (a winning patch takes the
+target's value for each column no event in its batch set, unless the batch
+also deleted the key).
 """
 
 import hashlib

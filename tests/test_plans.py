@@ -111,80 +111,107 @@ def test_no_collect_in_operator_sources():
     assert not offenders, offenders
 
 
-def test_mor_unit_rides_one_exchange_and_one_sort(spark, tmp_path, monkeypatch):
-    """A pre-grouped MOR unit: the batch is shuffled once by the write's
-    bucket-group key and sorted once, by the reduce window — the write's
-    declared layout sort is a prefix of that ordering and is elided. Its
-    delta files are byte-identical to the ones a direct MOR merge of the
-    same key-shuffled window reduce writes through the merge's own
-    repartition-and-sort."""
+def _write_plans(spark, monkeypatch, run):
+    """Executed plans of every parquet write ``run()`` issues."""
     from pyspark.sql.readwriter import DataFrameWriter
 
-    from translator_ingests_spark.cdc.apply import CdcEngine
-
     real_parquet = DataFrameWriter.parquet
-    log = generate_event_log(spark, 1000, seed=3)
     plans = []
 
     def capture(self, path, *a, **k):
         plans.append(plan_of(self._df))
         return real_parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    try:
+        run()
+    finally:
+        monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+    return plans
+
+
+def test_mor_unit_rides_one_exchange_and_one_sort(spark, tmp_path, monkeypatch):
+    """A MOR unit: the batch's raw events are shuffled once by the write's
+    bucket-group key and sorted once, by the merge's resolution window — the
+    write's declared layout sort is a prefix of that ordering and is elided.
+    Its delta files are byte-identical to the ones a MOR merge of the same
+    batch, pre-reduced by the standalone max_by reduce, writes."""
+    from translator_ingests_spark.cdc.apply import CdcEngine
+
+    log = generate_event_log(spark, 1000, seed=3)
 
     def blobs(eng):
         files = eng.table.current().files
         assert files and all(f.get("delta") for f in files)
         return sorted(open(f["path"], "rb").read() for f in files)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
-    eng = CdcEngine(spark, str(tmp_path / "pre"), num_buckets=8,
+    eng = CdcEngine(spark, str(tmp_path / "unit"), num_buckets=8,
                     write_mode="mor")
-    eng.apply_log(log, n_batches=1)
-    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+    plans = _write_plans(spark, monkeypatch,
+                         lambda: eng.apply_log(log, n_batches=1))
     assert len(plans) == 1
     assert plans[0].count("Exchange") == 1
     assert plans[0].count("Sort [") == 1, plans[0]
 
-    ref = CdcEngine(spark, str(tmp_path / "plain"), num_buckets=8,
+    ref = CdcEngine(spark, str(tmp_path / "reduced"), num_buckets=8,
                     write_mode="mor")
     ref.init_table()
     snap = ref.table.head()
     valid = log.filter(F.col("repo").isNotNull() & F.col("path").isNotNull()
                        & F.col("lsn").isNotNull())
-    reduced = lww_reduce(valid, keys=list(snap.key_cols), simple=True,
-                         simple_via_window=True)
+    # the max_by struct drops the event schema's non-null lsn/op; the no-op
+    # coalesces restore it, so the parquet schemas match too
+    reduced = lww_reduce(valid, keys=list(snap.key_cols), simple=True) \
+        .withColumn("lsn", F.coalesce("lsn", F.lit(0).cast("long"))) \
+        .withColumn("op", F.coalesce("op", F.lit("insert")))
     ref.table.merge(ref._derive_columns(reduced, snap), batch_id=0,
-                    mode="mor")
+                    mode="mor", winner_cols=ref._content_cols(snap))
     assert blobs(ref) == blobs(eng)
 
 
 @pytest.mark.parametrize("partial", [False, True], ids=["whole_row", "partial"])
-def test_cow_unit_plans_bulk_one_exchange_live_target_two(spark, tmp_path,
-                                                          monkeypatch, partial):
-    """COW units, captured at the parquet write. Whole-row: a bulk unit
-    onto an empty table rides the pre-grouped single exchange; a unit with
-    a live target rides two — the reduce's key shuffle and the merge's
-    bucket-group shuffle of source ∪ target. Partial-update units run the
-    same merge behind their column-wise reduce's shuffle: two exchanges
-    each, with no join."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
+def test_every_unit_kind_plans_one_exchange(spark, tmp_path, monkeypatch,
+                                            partial):
+    """COW units, captured at the parquet write: a bulk unit onto an empty
+    table and a unit with a live target each ride ONE exchange — the
+    merge's bucket-group shuffle of the raw events (∪ the target) — and
+    resolve every key in its window: no join, no aggregation. Partial-update
+    units assemble their columns in the same window."""
     from translator_ingests_spark.cdc.apply import CdcEngine
 
-    real_parquet = DataFrameWriter.parquet
-    plans = []
-
-    def capture(self, path, *a, **k):
-        plans.append(plan_of(self._df))
-        return real_parquet(self, path, *a, **k)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
     eng = CdcEngine(spark, str(tmp_path / "t"), num_buckets=8,
                     auto_compact_every=None, partial_updates=partial)
-    eng.apply_log(generate_event_log(spark, 1000, seed=3), n_batches=2)
-    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+    plans = _write_plans(spark, monkeypatch, lambda: eng.apply_log(
+        generate_event_log(spark, 1000, seed=3), n_batches=2))
 
     assert len(plans) == 2
-    bulk, live = plans
-    assert bulk.count("Exchange") == (2 if partial else 1), bulk
-    assert live.count("Exchange") == 2, live
-    assert "Join" not in live, live
+    for plan in plans:  # bulk, then live target
+        assert plan.count("Exchange") == 1, plan
+        assert "Join" not in plan and "SortAggregate" not in plan, plan
+        assert plan.count("Sort [") == 1, plan
+
+
+def test_mor_unit_on_256_buckets_runs_five_jobs(spark, tmp_path):
+    """The upfront lineage pass carries the affected-bucket set for any
+    bucket count (one bit_or mask word per 64 buckets), so a one-unit
+    apply_log on a 256-bucket MOR table runs no per-unit bucket probe:
+    the lineage pass (cache fill + aggregation) and the merge write (map
+    stage + write), five Spark jobs in all."""
+    from translator_ingests_spark.cdc.apply import CdcEngine
+
+    log = generate_event_log(spark, 2000, seed=5)
+    # warm-up unit: one-time per-session work (write-group salts) is not
+    # the unit's cost
+    CdcEngine(spark, str(tmp_path / "warm"), num_buckets=256,
+              write_mode="mor").apply_log(log, n_batches=1, total_events=2000)
+    eng = CdcEngine(spark, str(tmp_path / "t"), num_buckets=256,
+                    write_mode="mor", auto_compact_every=None)
+    eng.init_table()
+    sc = spark.sparkContext
+    sc.setJobGroup("mor-unit-256", "one MOR unit")
+    try:
+        eng.apply_log(log, n_batches=1, total_events=2000)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("mor-unit-256")) == 5
+    assert eng.table.current().last_batch_id == 0

@@ -65,10 +65,10 @@ def test_merge_and_lookup_after_rebucket(spark, tmp_path):
 
 
 def test_pre_grouped_unit_retried_after_concurrent_rebucket(spark, tmp_path, monkeypatch):
-    """A rebucket commits while a pre-grouped unit is in flight; the unit
-    loses the commit race and retries. Its __bucket/__grp and bucket set were
-    computed under the old count, so the retry must recompute them: every
-    row is then found by a bucket-pruned read and by lookup."""
+    """A rebucket commits while a unit is in flight; the unit loses the
+    commit race and retries. Its bucket set was computed under the old
+    count, so the retry must recompute it: every row is then found by a
+    bucket-pruned read and by lookup."""
     eng = seed(spark, tmp_path, write_mode="mor")
     table = eng.table
     real_merge = table.merge
@@ -84,7 +84,7 @@ def test_pre_grouped_unit_retried_after_concurrent_rebucket(spark, tmp_path, mon
     monkeypatch.setattr(table, "merge", racing_merge)
     nxt = [ev(100 + i, "insert", "r", f"q{i}", f"c{i}", "py", f"w{i}") for i in range(24)]
     eng.apply_log(spark.createDataFrame(nxt, EVENT_SCHEMA), events_per_batch=100)
-    assert len(calls) == 2 and calls[0]["src_pre_grouped"]
+    assert len(calls) == 2 and calls[0]["affected_buckets"]
     assert calls[0]["src_num_buckets"] == 4 and table.current().num_buckets == 16
 
     bucket = table._bucket_expr(16, ["repo", "path"])

@@ -67,7 +67,7 @@ def test_small_mor_unit_writes_one_bucket_sorted_file(spark, tmp_path, writes):
 
 @pytest.mark.parametrize(
     "partial, counts",
-    [(False, [(1, 1), (2, 3)]), (True, [(2, 3), (2, 3)])],
+    [(False, [(1, 1), (1, 1)]), (True, [(1, 1), (1, 1)])],
     ids=["whole_row", "partial"],
 )
 def test_small_cow_commits_write_one_file(spark, tmp_path, writes, partial,

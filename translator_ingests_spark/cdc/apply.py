@@ -31,8 +31,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from translator_ingests_spark.cdc.reduce import lww_reduce
-from translator_ingests_spark.functions.content import content_digest, normalize_content
+from translator_ingests_spark.cdc.reduce import lww_reduce, tie_hash
+from translator_ingests_spark.functions.content import (
+    content_digest,
+    nfc,
+    normalize_content,
+    normalize_line_endings,
+)
 from translator_ingests_spark.lake.table import LakeSchema, LakeTable, _SPARK_TYPES, empty_frame
 
 EVENT_SCHEMA = T.StructType(
@@ -91,8 +96,8 @@ def compute_code_hash() -> str:
 
 class CdcEngine:
     """Applies an ordered change-event log to one lake table, exactly once.
-    Content is normalized JVM-side (:func:`normalize_content`, ICU4J NFC on
-    non-ASCII rows); no Python worker runs on the apply, lookup or read
+    Content is normalized JVM-side (ICU4J NFC on non-ASCII rows, see
+    :meth:`_content_cols`); no Python worker runs on the apply, lookup or read
     paths. ``use_arrow_normalize`` is accepted and ignored."""
 
     def __init__(
@@ -143,10 +148,10 @@ class CdcEngine:
         self.auto_expire_every = auto_expire_every
         self.expire_keep_last = expire_keep_last
         self.expire_max_cursor_lag = expire_max_cursor_lag
-        # batches at or below this many valid events reduce via one max_by
-        # job (the decomposed winners plan's fixed cost never amortizes
-        # there — see lww_reduce's `simple` path); larger batches take the
-        # decomposed primitive-buffer plan that holds 0.8+ scaling at 96M
+        # batches at or below this many valid events are resolved by the
+        # merge window alone (the decomposed winners plan's fixed cost never
+        # amortizes there); larger whole-row batches first take the
+        # decomposed primitive-buffer reduce that holds 0.8+ scaling at 96M
         self.small_batch_events = small_batch_events
         # "cow" rewrites touched bucket files per batch (read-optimized);
         # "mor" (merge-on-read) writes each batch as delta files — O(batch)
@@ -161,9 +166,9 @@ class CdcEngine:
             raise ValueError(f"unknown write_mode {write_mode!r}")
         self.write_mode = write_mode
         # partial-update streams (null value column = "no change"): the
-        # per-key reduce becomes column-wise last-non-null-writer
-        # (reduce.partial_lww_reduce) and the merge coalesces unset columns
-        # from the target. COW only — the MOR fold is whole-row.
+        # merge window assembles each key column-wise (last non-null
+        # writer) and coalesces unset columns from the target. COW only —
+        # the MOR fold is whole-row.
         if partial_updates and write_mode != "cow":
             raise ValueError("partial_updates requires write_mode='cow'")
         self.partial_updates = partial_updates
@@ -335,8 +340,8 @@ class CdcEngine:
         # the whole pass stays inside whole-stage-codegen HashAggregate.
         # (collect_set/collect_list would demote the pass to
         # ObjectHashAggregate — interpreted, boxing per row; profiled 5.8×
-        # thread-CPU inflation at 8 cores on 48M events. The bucket set now
-        # derives from the per-batch winners table and schema events from the
+        # thread-CPU inflation at 8 cores on 48M events. The bucket set is
+        # carried by bit_or masks and schema events come from the
         # pushed-down filter scan below.)
         snap0 = self.table.head()
         meta_aggs = [
@@ -352,22 +357,10 @@ class CdcEngine:
             # scan of the schema_change struct column) disappears entirely
             F.count(F.when(F.col("op") == "schema_change", 1)).alias("n_schema"),
         ]
-        if snap0.num_buckets <= 64:
-            # the batch's affected-bucket SET as a bit_or mask — a primitive
-            # LONG buffer (bucket ids < 64 fit one word), so the pass stays
-            # a codegen HashAggregate and each data unit skips its
-            # bucket-probe job entirely (per-batch fixed cost → one merge
-            # job). Tables with >64 buckets fall back to the per-unit probe.
-            key_sql = ", ".join(f"`{c}`" for c in snap0.key_cols)
-            # same rule as LakeTable._bucket_expr; shiftleft takes a column
-            # only through SQL (the pyspark wrapper wants an int literal)
-            bit = F.expr(
-                "shiftleft(CAST(1 AS BIGINT), "
-                f"CAST(pmod(xxhash64({key_sql}), {snap0.num_buckets}) AS INT))"
-            )
-            meta_aggs.append(
-                F.bit_or(F.when(is_valid, bit)).alias("bucket_mask")
-            )
+        # the batch's affected-bucket SET as bit_or masks — primitive LONG
+        # buffers, one word per 64 buckets, so the pass stays a codegen
+        # HashAggregate and each data unit needs no bucket-probe job
+        meta_aggs += self._bucket_mask_aggs(is_valid, snap0)
         meta_q = events.groupBy("__batch", "source_partition").agg(*meta_aggs)
 
         meta_rows = meta_q.collect()  # bounded-collect: one row per (batch, source partition)
@@ -504,14 +497,9 @@ class CdcEngine:
                         unit_id,
                         lag_events=total - consumed,
                         pre_lineage=lineage_by_batch[b] if whole_batch else None,
-                        # bucket set from the upfront bit_or mask: whole
-                        # batches skip their per-unit bucket-probe job
-                        # (schema-split sub-batches pass the whole batch's
-                        # set — a superset is safe for merge pruning)
-                        pre_buckets=self._buckets_from_mask(lineage_by_batch[b]),
                         # masks were derived under THIS bucket count — a
                         # rebucket between snapshots invalidates them
-                        pre_buckets_nb=snap0.num_buckets,
+                        lineage_nb=snap0.num_buckets,
                     )
                     if m is not None:
                         manifests.append(m)
@@ -568,20 +556,32 @@ class CdcEngine:
         return manifests
 
     # -- one committed unit ----------------------------------------------------
+    def _bucket_mask_aggs(self, is_valid, snap) -> list:
+        """``bit_or`` aggregates of the valid events' bucket ids: one LONG
+        mask word per 64 buckets (``bucket_mask_<w>``; same bucket rule as
+        ``LakeTable._bucket_expr``). shiftleft takes a column shift only
+        through SQL — the pyspark wrapper wants an int literal."""
+        key_sql = ", ".join(f"`{c}`" for c in snap.key_cols)
+        b = f"pmod(xxhash64({key_sql}), {snap.num_buckets})"
+        return [
+            F.bit_or(F.when(is_valid, F.expr(
+                f"CASE WHEN {b} DIV 64 = {w} "
+                f"THEN shiftleft(CAST(1 AS BIGINT), CAST({b} % 64 AS INT)) END"
+            ))).alias(f"bucket_mask_{w}")
+            for w in range(-(-snap.num_buckets // 64))
+        ]
+
     @staticmethod
-    def _buckets_from_mask(lineage_rows: list) -> list[int] | None:
-        """Decode the upfront aggregation's per-partition bit_or bucket
-        masks into a sorted bucket list; None when masks are unavailable
-        (>64-bucket tables or rows from older paths)."""
-        mask = 0
-        for r in lineage_rows:
-            try:
-                m = r["bucket_mask"]
-            except (KeyError, ValueError):
-                return None
-            if m is not None:
-                mask |= m
-        return [i for i in range(64) if (mask >> i) & 1]
+    def _buckets_from_mask(lineage_rows: list, num_buckets: int) -> list[int]:
+        """Decode the per-partition ``bucket_mask_<w>`` words of
+        :meth:`_bucket_mask_aggs` into the sorted bucket list."""
+        out = []
+        for w in range(-(-num_buckets // 64)):
+            mask = 0
+            for r in lineage_rows:
+                mask |= r[f"bucket_mask_{w}"] or 0
+            out += [64 * w + i for i in range(64) if (mask >> i) & 1]
+        return out
 
     def _apply_data_unit(
         self,
@@ -589,19 +589,9 @@ class CdcEngine:
         unit_id: int,
         lag_events: int | None,
         pre_lineage: list | None = None,
-        pre_buckets: list[int] | None = None,
-        pre_buckets_nb: int | None = None,
+        lineage_nb: int | None = None,
     ) -> dict | None:
         snap = self.table.head()
-        if (
-            pre_buckets is not None
-            and pre_buckets_nb is not None
-            and pre_buckets_nb != snap.num_buckets
-        ):
-            # the table was rebucketed after the masks were computed — a
-            # stale bucket set under a different modulus is NOT a superset;
-            # fall back to the per-unit probe
-            pre_buckets = None
         if snap.last_batch_id >= unit_id:
             # already committed by a previous (crashed) run — exactly-once skip.
             # A crash BETWEEN the lake commit and _write_ckpt would otherwise
@@ -630,11 +620,11 @@ class CdcEngine:
         else:
             # standalone path (schema-split sub-batches, streaming epochs,
             # direct calls): ONE aggregation job yields per-partition
-            # lineage, the global validity stats (summed driver-side) AND
-            # purely primitive buffers: the pass stays inside
-            # whole-stage-codegen HashAggregate (see apply_log's meta
-            # aggregation comment; the bucket set derives from the
-            # winners table below).
+            # lineage, the global validity stats (summed driver-side) and
+            # the bucket masks — primitive buffers only, so the pass stays
+            # inside whole-stage-codegen HashAggregate (see apply_log's
+            # meta aggregation comment).
+            lineage_nb = snap.num_buckets
             lineage_rows = data.groupBy("source_partition").agg(
                 F.count(F.lit(1)).alias("events_in"),
                 F.count(F.when(is_valid, 1)).alias("rows"),
@@ -642,6 +632,7 @@ class CdcEngine:
                 F.max(F.when(is_valid, F.col("source_offset"))).alias("offset_max"),
                 F.min(F.when(is_valid, F.col("lsn"))).alias("lsn_min"),
                 F.max(F.when(is_valid, F.col("lsn"))).alias("lsn_max"),
+                *self._bucket_mask_aggs(is_valid, snap),
             ).collect()  # bounded-collect: one row per source partition
         events_in = sum(r["events_in"] for r in lineage_rows)
         if events_in == 0:
@@ -667,123 +658,38 @@ class CdcEngine:
             key=lambda d: (d["partition"] is None, d["partition"]),
         )
 
-        # Materialize the LWW phase-1 winners eagerly (small: one
-        # (key, max lsn) row per key, column-pruned scan) and take ONE
-        # tiny aggregation over the cached rows. Three birds: the exact
-        # key count gates the broadcast of the winners into the candidate
-        # join (≤1M winner rows ≈ tens of MB — event rows then never
-        # shuffle; above that the planner's shuffled-hash + AQE skew path
-        # stands); the affected-bucket set for merge file pruning comes
-        # from |keys| rows instead of a full-scan collect_set; and the
-        # merge job reuses the cached winners instead of re-aggregating
-        # the events.
+        # the bucket set for merge file pruning, from the lineage masks —
+        # unless a rebucket committed since they were computed: a set under
+        # another modulus is not a superset, so the merge re-derives it
+        affected_buckets = (
+            self._buckets_from_mask(lineage_rows, snap.num_buckets)
+            if lineage_nb == snap.num_buckets else None
+        )
+        # The merge window IS the LWW reduce: a unit hands the merge its raw
+        # valid events and each key is resolved once, in the merge's one
+        # exchange. Only a whole-row batch above ``small_batch_events``
+        # first takes the decomposed primitive-buffer reduce (lww_reduce):
+        # its persisted phase-1 winners' exact count gates the broadcast
+        # into the candidate join (<=1M winner rows ~ tens of MB — the
+        # event rows then never shuffle; above that the planner's
+        # shuffled-hash + AQE skew path stands), and the reduced rows enter
+        # the same window. Partial-update units always take the window: the
+        # decomposed reduce is whole-row.
         winners = None
-        pre_group = False
-        unit_mode = None
-        small_batch = n_valid <= self.small_batch_events
-        if self.partial_updates:
-            # column-wise reduce (one aggregation); bucket set as on the
-            # small-batch path — from the upfront mask when available
-            from translator_ingests_spark.cdc.reduce import partial_lww_reduce
-
-            if pre_buckets is not None:
-                affected_buckets = pre_buckets
-            else:
-                bucket = self.table._bucket_expr(snap.num_buckets, snap.key_cols)
-                affected_buckets = sorted(
-                    r["__b"]
-                    for r in valid.select(bucket.alias("__b")).distinct().collect()  # bounded-collect: <= num_buckets rows
-                )
-            reduced = partial_lww_reduce(valid, keys=list(snap.key_cols))
-        elif small_batch:
-            # SMALL-BATCH fast path (round-3 VERDICT #3): below the
-            # threshold the winners persist + exact-count gate are pure
-            # fixed cost. The affected buckets come precomputed from the
-            # upfront bit_or mask when available (zero extra jobs — the
-            # unit runs ONLY the merge) or from a primitive distinct
-            # over the cached events; the one-job window reduce executes
-            # INSIDE the merge's write pass.
-            if pre_buckets is not None:
-                affected_buckets = pre_buckets
-            else:
-                bucket = self.table._bucket_expr(snap.num_buckets, snap.key_cols)
-                affected_buckets = sorted(
-                    r["__b"]
-                    for r in valid.select(bucket.alias("__b")).distinct().collect()  # bounded-collect: <= num_buckets rows
-                )
-            # PRE-GROUPED unit (guide §2.4 — one exchange per unit):
-            # when the unit writes without reading a target (a MOR
-            # delta commit, or a bulk load onto empty buckets), the
-            # whole pipeline — reduce, derive, layout write — can ride
-            # ONE exchange: partition the batch by the write's
-            # bucket-group mapping up front, run the LWW window
-            # clustered on (__bucket, __grp, keys) (no further
-            # exchange: __grp is a function of the keys), and let the
-            # merge skip its repartition — the reduce window's sort IS
-            # the write sort. COW units with a live target keep the
-            # key-partitioned reduce (their union re-shuffles anyway,
-            # and the key exchange's map-side group-limit prunes dups
-            # before the wire).
-            unit_mode = self._resolve_write_mode(
-                snap, affected_buckets, n_valid
-            )
-            pre_group = (
-                bool(affected_buckets)
-                and (
-                    unit_mode == "mor"
-                    or not self.table._files_overlapping(
-                        snap, affected_buckets
-                    )
-                )
-            )
-            if pre_group:
-                bucket = self.table._bucket_expr(
-                    snap.num_buckets, snap.key_cols
-                )
-                pv = (
-                    valid.withColumn("__bucket", bucket)
-                    .withColumn("__grp", self.table._write_group(snap))
-                    .repartition("__grp")
-                )
-                reduced = lww_reduce(
-                    pv, keys=list(snap.key_cols), simple=True,
-                    simple_via_window=True,
-                    cluster_cols=["__bucket", "__grp"],
-                )
-            else:
-                reduced = lww_reduce(
-                    valid, keys=list(snap.key_cols), simple=True,
-                    simple_via_window=True,
-                )
-        else:
+        events = valid
+        if n_valid > self.small_batch_events and not self.partial_updates:
             winners = valid.groupBy(*snap.key_cols).agg(
                 F.max(F.col("lsn")).alias("__wl")
             ).persist()
-            if pre_buckets is not None:
-                # mask-supplied buckets: the winners stats job shrinks to
-                # a bare count (primitive buffer, no collect_set)
-                n_keys = winners.count()
-                affected_buckets = pre_buckets
-            else:
-                bucket = self.table._bucket_expr(snap.num_buckets, snap.key_cols)
-                wstats = winners.agg(
-                    F.count(F.lit(1)).alias("n_keys"),
-                    F.collect_set(bucket).alias("buckets"),
-                ).collect()[0]  # bounded-collect: one aggregate row
-                n_keys = wstats["n_keys"]
-                affected_buckets = sorted(wstats["buckets"] or [])
-            reduced = lww_reduce(
+            events = lww_reduce(
                 valid,
                 keys=list(snap.key_cols),
-                broadcast_winners=n_keys <= 1_000_000,
+                broadcast_winners=winners.count() <= 1_000_000,
                 winners=winners,
             )
 
-        source = self._derive_columns(reduced, snap)
-        if unit_mode is None:
-            unit_mode = self._resolve_write_mode(
-                snap, affected_buckets, n_valid
-            )
+        source = self._derive_columns(events, snap)
+        unit_mode = self._resolve_write_mode(snap, affected_buckets, n_valid)
         metrics = {
             "events_in": int(events_in),
             "invalid_events": int(events_in - n_valid),
@@ -811,7 +717,7 @@ class CdcEngine:
             delivery=self._delivery,
             mode=unit_mode,
             partial_update=self.partial_updates,
-            src_pre_grouped=pre_group,
+            winner_cols=self._content_cols(snap),
             src_num_buckets=snap.num_buckets,
         )
         if winners is not None:
@@ -868,19 +774,18 @@ class CdcEngine:
         base_rows = sum(rows)
         return "mor" if n_valid < self._MOR_RATIO * base_rows else "cow"
 
-    def _derive_columns(self, reduced: DataFrame, snap) -> DataFrame:
-        """Align the reduced batch to the current lake schema: normalized
-        content, JVM-side sha256 digest, and evolution-added columns filled
-        from the event's ``extras`` map (cast to the column's type).
+    def _derive_columns(self, events: DataFrame, snap) -> DataFrame:
+        """Align the batch's events to the current lake schema: base
+        columns, evolution-added columns filled from the event's ``extras``
+        map (cast to the column's type), and ``__tie``, the raw event's
+        same-LSN tie hash. Content stays raw here: its normalization and
+        digest run after the merge's resolution, on winners only (see
+        :meth:`_content_cols`).
 
         Base columns resolve by *field id* (their original schema-v1 name is
         the event column), so a rename_column on e.g. ``lang`` keeps feeding
         the renamed lake column from the event's fixed ``lang`` field."""
         is_data = F.col("op") != "delete"
-        # normalized in a projection of its own: Catalyst treats the ICU call
-        # as nondeterministic, so it is not re-inlined into the two uses below
-        reduced = reduced.withColumn("__content", F.when(is_data, normalize_content(F.col("content"))))
-        norm = F.col("__content")
         # original (schema v1) name per field id — the event-facing name
         origin_name = {f.field_id: f.name for f in snap.schemas[1].fields}
         base_exprs = {
@@ -888,11 +793,14 @@ class CdcEngine:
             "path": F.col("path"),
             "commit": F.col("commit"),
             "lang": F.col("lang"),
-            "content": norm,
-            "content_sha256": F.when(is_data, content_digest(norm)),
+            "content": F.col("content"),
+            # digested after the resolution — unless content itself was
+            # dropped from the lake: then only the event carries its input
+            "content_sha256": F.lit(None).cast("string") if self._content_cols(snap)
+            else F.when(is_data, content_digest(normalize_content(F.col("content")))),
         }
         cols = []
-        has_extras = "extras" in reduced.columns
+        has_extras = "extras" in events.columns
         for fld in snap.schema.fields:
             origin = origin_name.get(fld.field_id)
             if fld.name == snap.lsn_col:
@@ -918,21 +826,30 @@ class CdcEngine:
                 )
             else:
                 cols.append(F.lit(None).cast(_SPARK_TYPES[fld.type]).alias(fld.name))
-        cols += [F.col("op"), F.col("lsn")]
-        for pc in ("__bucket", "__grp"):
-            # pre-grouped batches (see _apply_data_unit) carry the write
-            # layout's bucket/group columns through the derive untouched so
-            # the merge can skip recomputing them and reuse the exchange
-            if pc in reduced.columns:
-                cols.append(F.col(pc))
-        if "__del_lsn" in reduced.columns:
-            # partial mode: the batch's kill marker rides through to merge
-            cols.append(F.col("__del_lsn"))
+        cols += [F.col("op"), F.col("lsn"), tie_hash(events).alias("__tie")]
         if has_extras:
             # pass the raw extras map through — the lake retains it so values
             # for not-yet-added columns survive out-of-order schema evolution
             cols.append(F.when(is_data, F.col("extras")).alias("extras"))
-        return reduced.select(*cols)
+        return events.select(*cols)
+
+    def _content_cols(self, snap) -> list:
+        """The merge's ``winner_cols`` for the content plane: line endings
+        (codegen projection), the gated ICU NFC call (the one interpreted
+        node), then the sha256 digest (codegen again) — each on winning
+        source rows only, so redelivered and superseded events are never
+        normalized. Line endings go first: CR and LF are NFC starters that
+        never compose, so the rewrite commutes with NFC."""
+        name = {f.field_id: f.name for f in snap.schema.fields}
+        lake = {o.name: name[o.field_id] for o in snap.schemas[1].fields
+                if o.field_id in name}
+        if "content" not in lake:
+            return []
+        c = lake["content"]
+        steps = [(c, normalize_line_endings(F.col(c))), (c, nfc(F.col(c)))]
+        if "content_sha256" in lake:
+            steps.append((lake["content_sha256"], content_digest(F.col(c))))
+        return steps
 
     def _rebuild_ckpt_from_snapshot(self, unit_id: int) -> dict | None:
         """Recover a checkpoint manifest lost to a crash between the lake

@@ -24,17 +24,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# ranking for deterministic tie-break at equal LSN (higher wins):
-# delete > update > insert > schema_change — a delete that shares an LSN with
-# a data op (corrupt producer) resolves the same way on every replay.
-def _op_rank(op_col: str):
-    c = F.col(op_col)
-    return (
-        F.when(c == "delete", 3)
-        .when(c == "update", 2)
-        .when(c == "insert", 1)
-        .otherwise(0)
-    )
+from translator_ingests_spark.lake.table import op_rank as _op_rank
+
+
+def tie_hash(df: DataFrame, lsn_col: str = "lsn"):
+    """The deterministic same-LSN tie-break: xxhash64 over every event
+    column but the LSN (MapType columns excluded — xxhash64 rejects them).
+    Exact redeliveries hash equal, so either survivor is the same row."""
+    from pyspark.sql.types import MapType
+
+    return F.xxhash64(*[
+        F.col(f.name) for f in df.schema.fields
+        if f.name != lsn_col and not isinstance(f.dataType, MapType)
+    ])
 
 
 def lww_reduce(
@@ -45,8 +47,6 @@ def lww_reduce(
     broadcast_winners: bool | None = None,
     winners: DataFrame | None = None,
     simple: bool = False,
-    simple_via_window: bool = False,
-    cluster_cols: list[str] | None = None,
 ) -> DataFrame:
     """Reduce to one row per key: the max-(lsn, op_rank, hash) survivor.
 
@@ -86,62 +86,23 @@ def lww_reduce(
     re-aggregating the events.
     """
     cols = df.columns
-    # xxhash64 doesn't accept MapType columns — exclude them from the tie hash
-    from pyspark.sql.types import MapType
-
-    hashable = [
-        f.name for f in df.schema.fields
-        if f.name != lsn_col and not isinstance(f.dataType, MapType)
-    ]
     if simple:
-        # SMALL-BATCH fast path, two equivalent physical shapes over the
-        # SAME total order (lsn desc, op_rank desc, tie hash desc) —
-        # identical survivor either way. The decomposed plan's winners
-        # materialization + exact-count broadcast gate cost a fixed
-        # ~0.2s/batch that never amortizes below ~1M events (round-3
-        # VERDICT #3). Caller contract: ``lsn_col`` non-null (the engine's
-        # validity filter guarantees it) — all-null-LSN keys need the
-        # decomposed path's null-safe join.
-        #
-        # ``simple_via_window=True`` (the ENGINE's merge path, which
-        # consumes every column): a rank<=1 row_number window — plans as
-        # WindowGroupLimit with a PARTIAL pass below the exchange (each
-        # input partition pruned to one row per key map-side) and no
-        # variable-length aggregation buffer; A/B'd ~17% faster than the
-        # max_by when all columns are materialized.
-        #
-        # Default (standalone reduce-only queries): the max_by aggregation —
-        # under a consumer that prunes columns (count(), key-only
-        # projections) Catalyst drops the unused max_by aggregate and the
-        # whole payload/tie-hash computation with it, which the window
-        # cannot do (its order expressions are always live).
-        if simple_via_window:
-            from pyspark.sql import Window as W
-
-            # ``cluster_cols``: caller-supplied columns that are pure
-            # FUNCTIONS of the keys (e.g. the write layout's __bucket /
-            # __grp) — prepended to the window partitioning so an input
-            # the caller already repartitioned by them needs NO further
-            # exchange, and excluded from the tie hash so the survivor on
-            # pathological same-(lsn, op)-ties is byte-identical with and
-            # without them.
-            cl = list(cluster_cols or [])
-            tie_cols = [c for c in hashable if c not in cl]
-            w = W.partitionBy(*cl, *keys).orderBy(
-                F.col(lsn_col).desc(),
-                _op_rank(op_col).desc(),
-                F.xxhash64(*[F.col(c) for c in tie_cols]).desc(),
-            )
-            return (
-                df.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .select(*cols)
-            )
+        # SMALL-BATCH shape for standalone reduce-only queries: one max_by
+        # aggregation over the same total order (lsn, op_rank, tie hash).
+        # The decomposed plan's winners materialization + exact-count
+        # broadcast gate cost a fixed ~0.2s/batch that never amortizes
+        # below ~1M events (round-3 VERDICT #3); under a consumer that
+        # prunes columns (count(), key-only projections) Catalyst drops the
+        # unused max_by aggregate and the whole payload/tie-hash
+        # computation with it. Caller contract: ``lsn_col`` non-null — all-
+        # null-LSN keys need the decomposed path's null-safe join. (The CDC
+        # engine never reduces small batches here: its merge window
+        # resolves the raw events directly.)
         payload = F.struct(*[F.col(c) for c in cols]).alias("__row")
         order = F.struct(
             F.col(lsn_col).alias("o0"),
-            _op_rank(op_col).alias("o1"),
-            F.xxhash64(*[F.col(c) for c in hashable]).alias("o2"),
+            _op_rank(F.col(op_col)).alias("o1"),
+            tie_hash(df, lsn_col).alias("o2"),
         )
         reduced = df.groupBy(*keys).agg(F.max_by(payload, order).alias("__row"))
         return reduced.select(*[F.col(f"__row.{c}").alias(c) for c in cols])
@@ -161,70 +122,8 @@ def lww_reduce(
 
     payload = F.struct(*[F.col(c) for c in cols]).alias("__row")
     order = F.struct(
-        _op_rank(op_col).alias("o1"),
-        F.xxhash64(*[F.col(c) for c in hashable]).alias("o2"),
+        _op_rank(F.col(op_col)).alias("o1"),
+        tie_hash(df, lsn_col).alias("o2"),
     )
     reduced = cand.groupBy(*keys).agg(F.max_by(payload, order).alias("__row"))
     return reduced.select(*[F.col(f"__row.{c}").alias(c) for c in cols])
-
-
-def partial_lww_reduce(
-    df: DataFrame,
-    keys: list[str],
-    lsn_col: str = "lsn",
-    op_col: str = "op",
-) -> DataFrame:
-    """Within-batch reduction for PARTIAL-update streams (the Paimon
-    partial-update merge-engine analog): a non-delete event's NULL value
-    column means "no change", so the per-key survivor is assembled
-    column-wise — each value column takes its LAST NON-NULL writer, not the
-    last event's (possibly null) value.
-
-    Semantics per key, with ``D`` = the greatest delete LSN (if any):
-    - the survivor's LSN is the greatest event LSN; if that event is the
-      delete (``D == max``), the survivor IS a delete (values null);
-    - otherwise each value column takes the value of its greatest-LSN
-      non-null non-delete writer **above D** — writes at or below a delete
-      are dead (the delete killed the row; a later partial update
-      re-creates it with only the columns it actually set).
-
-    Plan: ONE aggregation — ``max_by(col, when(col set, lsn))`` plus a
-    per-column writer-LSN max and the delete-LSN max, then a pure
-    projection applies the delete gate. String-valued ``max_by`` buffers
-    make it plan as a SortAggregate: a full ``Sort`` of the batch by the
-    keys under the partial (map-side) aggregate, the exchange, then a
-    second full ``Sort`` under the final aggregate. Those two sorts are the
-    stated cost of the opt-in partial mode — the default whole-row stream
-    keeps the window and decomposed plans of :func:`lww_reduce`.
-    """
-    value_cols = [c for c in df.columns if c not in {*keys, lsn_col, op_col}]
-    is_del = F.col(op_col) == F.lit("delete")
-    aggs = [
-        F.max(F.col(lsn_col)).alias(lsn_col),
-        F.max(F.when(is_del, F.col(lsn_col))).alias("__del_lsn"),
-    ]
-    for c in value_cols:
-        live = F.when(F.col(c).isNotNull() & ~is_del, F.col(lsn_col))
-        aggs.append(F.max_by(F.col(c), live).alias(c))
-        aggs.append(F.max(live).alias(f"__wl_{c}"))
-    red = df.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
-
-    died = F.coalesce(F.col("__del_lsn"), F.lit(-(1 << 62)))
-    out = [*[F.col(k) for k in keys]]
-    surv_is_del = F.col("__del_lsn").eqNullSafe(F.col(lsn_col))
-    for c in value_cols:
-        out.append(
-            F.when(
-                ~surv_is_del & (F.col(f"__wl_{c}") > died), F.col(c)
-            ).alias(c)
-        )
-    out.append(F.col(lsn_col))
-    out.append(
-        F.when(surv_is_del, F.lit("delete")).otherwise(F.lit("update")).alias(op_col)
-    )
-    # carried to the merge: a delete BELOW the survivor killed the key's
-    # whole prior row, so the merge's window fill must NOT resurrect target
-    # columns (partial mode's cross-batch contract: per-key in-order
-    # delivery, so any in-batch delete out-ranks the stored row)
-    out.append(F.when(~surv_is_del, F.col("__del_lsn")).alias("__del_lsn"))
-    return red.select(*out)

@@ -1,7 +1,8 @@
 """Content plane: normalization + digesting, entirely JVM-side.
 
 Every lake row carries ``content_sha256 = sha2(normalize(content), 256)``;
-normalization is Unicode NFC, then ``\\r\\n`` → ``\\n`` and lone ``\\r`` → ``\\n``.
+normalization is ``\\r\\n`` → ``\\n`` and lone ``\\r`` → ``\\n``, then Unicode NFC
+(the two commute: CR and LF never compose).
 No Python worker runs: NFC is ICU4J's (``com.ibm.icu.text.Normalizer``,
 shipped with Spark) through ``reflect``, and only on rows where
 ``octet_length(c) > length(c)``, i.e. with a multi-byte character — ASCII is
@@ -21,16 +22,29 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def normalize_content(col: Column) -> Column:
-    """Normalized content column; nulls pass through. Catalyst treats
-    ``reflect`` as nondeterministic: project the result once, then reuse it."""
-    nfc = F.when(
+def normalize_line_endings(col: Column) -> Column:
+    """``\\r\\n`` → ``\\n``, then lone ``\\r`` → ``\\n``; nulls pass through."""
+    return F.regexp_replace(F.regexp_replace(col, "\r\n", "\n"), "\r", "\n")
+
+
+def nfc(col: Column) -> Column:
+    """NFC via ICU4J, gated to rows with a multi-byte character. ``reflect``
+    has no generated code: a projection holding it leaves whole-stage
+    codegen, so keep this call in a projection of its own."""
+    return F.when(
         F.octet_length(col) > F.length(col),
         F.reflect(
             F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), col, F.lit(False)
         ),
     ).otherwise(col)
-    return F.regexp_replace(F.regexp_replace(nfc, "\r\n", "\n"), "\r", "\n")
+
+
+def normalize_content(col: Column) -> Column:
+    """Normalized content column; nulls pass through. Catalyst treats
+    ``reflect`` as nondeterministic: project the result once, then reuse it.
+    Line endings are rewritten first: CR and LF are NFC starters that never
+    compose with a neighbour, so the rewrite commutes with NFC."""
+    return nfc(normalize_line_endings(col))
 
 
 def content_digest(col: Column) -> Column:

@@ -43,7 +43,7 @@ import uuid
 from collections import OrderedDict
 from dataclasses import dataclass, field, replace as _dc_replace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -86,6 +86,18 @@ def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
     ``createDataFrame([], schema)`` it ships no driver rows to a Python worker."""
     return spark.range(0).select(
         *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
+
+
+def op_rank(op: Column) -> Column:
+    """Same-LSN tie rank of a change op (higher wins): delete > update >
+    insert > anything else — a delete that shares an LSN with a data op
+    (corrupt producer) resolves the same way on every replay."""
+    return (
+        F.when(op == "delete", 3)
+        .when(op == "update", 2)
+        .when(op == "insert", 1)
+        .otherwise(0)
     )
 
 
@@ -1052,10 +1064,7 @@ class LakeTable:
         only adjacent partitions, so each written file still covers one
         contiguous bucket range, and the file count follows the bytes the
         commit shuffles: one file below ~1 MiB, up to one per shuffle
-        partition (``get_spark`` sets one per core) for a large commit.
-        Exposed so the apply loop can pre-partition a batch by the SAME
-        mapping and let the whole unit (reduce → derive → write) ride one
-        exchange."""
+        partition (``get_spark`` sets one per core) for a large commit."""
         n_parts = self.spark._jsparkSession.sessionState().conf().numShufflePartitions()
         group = F.floor(F.col("__bucket") * n_parts / snap.num_buckets).cast("int")
         salts = _partition_salts(self.spark, n_parts)
@@ -1717,14 +1726,20 @@ class LakeTable:
         delivery: str = "in_order",
         mode: str = "cow",
         partial_update: bool = False,
-        src_pre_grouped: bool = False,
+        winner_cols: list[tuple[str, Column]] | None = None,
         src_num_buckets: int | None = None,
     ) -> Snapshot:
-        """Idempotent last-writer-wins MERGE of a pre-reduced batch.
+        """Idempotent last-writer-wins MERGE of a change batch.
 
-        ``source`` must hold exactly one row per key (the apply loop's max-LSN
-        reduction guarantees this) with columns: key_cols + current value
-        columns + ``op`` ∈ insert|update|delete + ``lsn``.
+        ``source`` holds any number of events per key (a pre-reduced batch
+        is the one-row-per-key case) with columns: key_cols + current value
+        columns + ``op`` ∈ insert|update|delete + ``lsn``, and optionally
+        ``__tie``, a LONG same-LSN tie-break (the CDC engine's hash of the
+        raw event). Each key is resolved ONCE, by a rank-1 window over
+        source ∪ target ordered by ``(lsn DESC, is_target DESC, op rank
+        DESC, __tie DESC)``: within the batch the greatest ``(lsn, op rank,
+        __tie)`` event is the key's survivor, and it replaces the stored row
+        only if its LSN is strictly greater.
 
         Semantics (MERGE INTO analog, reference: node-merge semantics at
         /root/reference/src/translator_ingest/merging.py:20-88):
@@ -1753,20 +1768,24 @@ class LakeTable:
         amplification. Same exactly-once guard, same watermark guard, same
         final state — pytest asserts MOR replay ≡ COW replay byte-for-byte.
 
-        ``partial_update=True`` (Paimon partial-update analog): a matched
-        update's NULL value column keeps the TARGET's value instead of
-        nulling it — the source row is a sparse column patch (reduced by
-        ``cdc.reduce.partial_lww_reduce``, whose non-null ``__del_lsn``
-        marks an in-batch delete below the patch: then the patch's own
-        columns are all that survives). It runs on the same union+window
-        merge as whole-row units; the window fills the winning patch's null
-        columns from the target row. COW only: the merge-on-read fold is
-        whole-row, so a partial delta would clobber unset columns at read
-        time — requesting both raises.
+        ``partial_update=True`` (Paimon partial-update analog): a non-delete
+        event's NULL value column means "no change", so the window assembles
+        the survivor column-wise — each value column takes its greatest-LSN
+        non-null writer above the key's greatest in-batch delete ``D``; with
+        no in-batch delete, a column no event set keeps the TARGET's value.
+        COW only: the merge-on-read fold is whole-row, so a partial delta
+        would clobber unset columns at read time — requesting both raises.
 
-        ``src_num_buckets``: the bucket count the source's ``__bucket`` /
-        ``__grp`` and ``affected_buckets`` were computed under; after a
-        concurrent ``rebucket`` they are recomputed under the head's count.
+        ``winner_cols``: ``(name, expr)`` pairs evaluated AFTER the
+        resolution, on winning live source rows only and in order (each sees
+        the previous ones' output) — per-row derivations too costly to run
+        on events that lose (the CDC engine's content normalization and
+        digest). A source row's ``name`` column enters the window as the
+        derivation's raw input.
+
+        ``src_num_buckets``: the bucket count ``affected_buckets`` was
+        computed under; after a concurrent ``rebucket`` the set is stale
+        and is recomputed under the head's count.
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown merge mode {mode!r}")
@@ -1789,17 +1808,11 @@ class LakeTable:
         if snap.low_watermark >= 0:
             source = source.filter(F.col(lsn_col) > F.lit(snap.low_watermark))
 
-        # a pre-grouped source (apply loop rode the write-group exchange)
-        # carries __bucket/__grp: recomputing them would discard the lineage
-        # the pre-grouped write relies on, unless another bucket count made
-        # them (and the bucket set) stale
+        # a bucket set computed under another bucket count (a rebucket
+        # committed while this unit was in flight) is not a superset
         if src_num_buckets not in (None, snap.num_buckets):
             affected_buckets = None
-        src_pre_grouped = (src_pre_grouped and "__grp" in source.columns
-                           and src_num_buckets == snap.num_buckets)
-        src = source if src_pre_grouped else source.drop("__bucket", "__grp").withColumn(
-            "__bucket", self._bucket_expr(snap.num_buckets, keys)
-        )
+        src = source.withColumn("__bucket", self._bucket_expr(snap.num_buckets, keys))
         # affected buckets: tiny driver-side list (≤ num_buckets), this is
         # the bucket-pruning step that keeps merge cost O(batch), not
         # O(table). Callers that already know the batch's bucket set (the
@@ -1813,30 +1826,6 @@ class LakeTable:
                 r["__bucket"] for r in src.select("__bucket").distinct().collect()  # bounded-collect: <= num_buckets rows
             )
 
-        # the batch's row/delete counts ride along the write pass as an
-        # Observation — no separate count job, no cache of the merge output.
-        # NOT on the foreachBatch path: Observation.get never resolves inside
-        # a streaming epoch callback (its listener event can't be delivered
-        # while the callback thread blocks on it — measured deadlock), so
-        # streaming callers set use_observation=False and pay one small
-        # count job instead.
-        obs = None
-        if use_observation:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            src = src.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.count(F.when(F.col(op_col) == "delete", 1)).alias("deletes"),
-            )
-        else:
-            row = src.agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.count(F.when(F.col(op_col) == "delete", 1)).alias("deletes"),
-            ).collect()[0]  # bounded-collect: one aggregate row
-            merge_counts = {"rows": row["rows"], "deletes": row["deletes"]}
-
         extras_map_t = T.MapType(T.StringType(), T.StringType())
         s_extras = (
             F.col(extras_col) if extras_col and extras_col in source.columns
@@ -1845,8 +1834,7 @@ class LakeTable:
 
         # the batch aligned to the raw row layout: values nulled and
         # tombstone=true for deletes, so a delete out-ranks stale updates
-        # exactly like a stored tombstone. Partial mode carries the
-        # reducer's in-batch kill marker ``__del_lsn`` to the window fill.
+        # exactly like a stored tombstone
         is_del_src = F.col(op_col) == F.lit("delete")
         s_rows = src.select(
             *[F.col(k) for k in keys],
@@ -1860,79 +1848,86 @@ class LakeTable:
             .otherwise(s_extras)
             .alias(EXTRAS_COL),
             F.col("__bucket"),
-            *([F.col("__grp")] if src_pre_grouped else []),
-            *([(F.col("__del_lsn") if "__del_lsn" in src.columns
-                else F.lit(None).cast("long")).alias("__del_lsn")]
-              if partial_update else []),
+            op_rank(F.col(op_col)).alias("__rank"),
+            (F.col("__tie") if "__tie" in src.columns
+             else F.lit(0).cast("long")).alias("__tie"),
+            F.lit(0).alias("__is_tgt"),
         )
 
-        if mode == "mor":
-            # merge-on-read: the aligned batch BECOMES the write. No target
-            # read, no window, no base rewrite.
-            return self._finish_merge(
-                snap, s_rows, affected, list(snap.files), batch_id, lineage,
-                metrics, code_hash, stats_out, advance_watermark_to, delivery,
-                obs, src, op_col,
-                None if obs is not None else merge_counts, delta=True,
-                pre_grouped=src_pre_grouped,
-            )
+        # the batch's resolved row/delete counts ride the write pass as an
+        # Observation — no separate count job, no cache of the merge output.
+        # NOT on the foreachBatch path: Observation.get never resolves inside
+        # a streaming epoch callback (its listener event can't be delivered
+        # while the callback thread blocks on it — measured deadlock), so
+        # streaming callers set use_observation=False and pay one small
+        # count job instead.
+        obs = None
+        merge_counts = None
+        if use_observation:
+            from pyspark.sql import Observation
 
-        # file pruning: only files whose bucket range intersects the batch
-        # are read and rewritten; their rows in *other* buckets pass through
-        # the merge untouched (target-only rows survive by construction).
-        # When merge-on-read delta files exist, the read set must be the
-        # bucket-overlap CLOSURE (fold-complete) and the target is the
-        # folded NET state — the rewrite then restores COW disjointness for
-        # every bucket it touches.
-        if any(f.get("delta") for f in snap.files):
-            affected_files = self._bucket_closure(snap.files, affected)
+            obs = Observation()
         else:
-            affected_files = self._files_overlapping(snap, affected)
-        affected_paths = {f["path"] for f in affected_files}
-        untouched_files = [f for f in snap.files if f["path"] not in affected_paths]
+            merge_counts = self._source_counts(s_rows, keys, lsn_target)
 
-        if not affected_files:
-            # EMPTY-TARGET fast path (initial/bulk load): the source is
-            # already one row per key, so the LWW resolution window has
-            # nothing to resolve — write the aligned source rows directly
-            # (one exchange + layout sort, no window pass; a pre-grouped
-            # source skips even that exchange)
-            return self._finish_merge(
-                snap, s_rows.drop("__del_lsn"), affected, untouched_files,
-                batch_id, lineage, metrics, code_hash, stats_out,
-                advance_watermark_to, delivery, obs, src, op_col,
-                None if obs is not None else merge_counts, delta=False,
-                pre_grouped=src_pre_grouped,
-            )
-        # COW MERGE: a per-key rank-1 selection over source ∪ target ordered
-        # by (lsn DESC, is_target DESC) — the source row wins iff its LSN is
-        # STRICTLY greater (is_target breaks the tie toward the target; a
-        # null target LSN sorts below any source LSN). Both branches shuffle
-        # ONCE, by the write's bucket-group key, and the row_number window
-        # runs on top of that exchange inside ``_finish_merge``, whose sort
-        # by (group, bucket, keys, ...) is precisely the write order — the
-        # plan is scan ∪ scan → exchange → window → write. A source delete
-        # is already a tombstone row, so a winning delete lands as one and a
-        # losing one vanishes with its row. The non-empty target re-shuffles
-        # anyway and has no __grp, so a pre-grouped source drops its own.
-        s_rows = s_rows.drop("__grp").withColumn("__is_tgt", F.lit(0))
-        t_rows = self._net_raw(snap, affected_files).select(
-            *[F.col(k) for k in keys],
-            *[F.col(c) for c in value_cols],
-            F.col(lsn_target),
-            F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)).alias(TOMBSTONE_COL),
-            F.col(EXTRAS_COL),
-            self._bucket_expr(snap.num_buckets, keys).alias("__bucket"),
-            *([F.lit(None).cast("long").alias("__del_lsn")] if partial_update else []),
-            F.lit(1).alias("__is_tgt"),
-        )
+        # merge-on-read: the resolved batch BECOMES the write — no target
+        # read, no base rewrite. COW: file pruning — only files whose bucket
+        # range intersects the batch are read and rewritten; their rows in
+        # *other* buckets pass through the merge untouched (target-only rows
+        # survive by construction). When merge-on-read delta files exist,
+        # the read set must be the bucket-overlap CLOSURE (fold-complete)
+        # and the target is the folded NET state — the rewrite then restores
+        # COW disjointness for every bucket it touches. The target (one row
+        # per key) joins the window as __is_tgt=1 rows; an initial/bulk load
+        # onto empty buckets has none, and the window only resolves the batch.
+        result, untouched_files = s_rows, list(snap.files)
+        if mode == "cow":
+            if any(f.get("delta") for f in snap.files):
+                affected_files = self._bucket_closure(snap.files, affected)
+            else:
+                affected_files = self._files_overlapping(snap, affected)
+            affected_paths = {f["path"] for f in affected_files}
+            untouched_files = [f for f in snap.files if f["path"] not in affected_paths]
+            if affected_files:
+                result = s_rows.unionByName(self._net_raw(snap, affected_files).select(
+                    *[F.col(k) for k in keys],
+                    *[F.col(c) for c in value_cols],
+                    F.col(lsn_target),
+                    F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)).alias(TOMBSTONE_COL),
+                    F.col(EXTRAS_COL),
+                    self._bucket_expr(snap.num_buckets, keys).alias("__bucket"),
+                    F.lit(0).alias("__rank"),
+                    F.lit(0).cast("long").alias("__tie"),
+                    F.lit(1).alias("__is_tgt"),
+                ))
         return self._finish_merge(
-            snap, s_rows.unionByName(t_rows), affected, untouched_files,
-            batch_id, lineage, metrics, code_hash, stats_out,
-            advance_watermark_to, delivery, obs, src, op_col,
-            None if obs is not None else merge_counts, delta=False,
-            fuse_lww=True,
+            snap, result, affected, untouched_files, batch_id, lineage,
+            metrics, code_hash, stats_out, advance_watermark_to, delivery,
+            obs, s_rows, merge_counts, delta=mode == "mor",
+            partial_update=partial_update, winner_cols=winner_cols,
         )
+
+    @staticmethod
+    def _resolution_order(lsnc: str) -> list[Column]:
+        """The per-key LWW total order over source ∪ target rows."""
+        return [F.desc(lsnc), F.desc("__is_tgt"), F.desc("__rank"), F.desc("__tie")]
+
+    def _source_counts(self, s_rows: DataFrame, keys: list, lsnc: str) -> dict:
+        """Explicit-job twin of the write pass's Observation: the resolved
+        batch's key count and how many of those keys' survivors delete."""
+        from pyspark.sql import Window as W
+
+        w = W.partitionBy(*keys).orderBy(*self._resolution_order(lsnc))
+        row = (
+            s_rows.withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") == 1)
+            .agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.count(F.when(F.col(TOMBSTONE_COL), 1)).alias("deletes"),
+            )
+            .collect()[0]  # bounded-collect: one aggregate row
+        )
+        return {"rows": row["rows"], "deletes": row["deletes"]}
 
     def _finish_merge(
         self,
@@ -1948,34 +1943,30 @@ class LakeTable:
         advance_watermark_to: int | None,
         delivery: str,
         obs,
-        src: DataFrame,
-        op_col: str,
+        s_rows: DataFrame,
         merge_counts: dict | None,
         delta: bool,
-        fuse_lww: bool = False,
-        pre_grouped: bool = False,
+        partial_update: bool = False,
+        winner_cols: list[tuple[str, Column]] | None = None,
     ) -> Snapshot:
-        """Shared merge tail: the partitioned write, observation resolution,
-        manifest splice (``delta=True`` flags merge-on-read files) and the
-        snapshot commit. ``result`` must carry ``__bucket``.
+        """Shared merge tail: the per-key resolution fused into the
+        partitioned write, observation resolution, manifest splice
+        (``delta=True`` flags merge-on-read files) and the snapshot commit.
 
-        ``fuse_lww=True``: ``result`` is the source ∪ target union (with
-        ``__is_tgt``) and the per-key LWW resolution itself runs HERE, as a
-        rank-1 ``row_number`` window over ``(__bucket, __grp, keys)``
-        directly on top of the write repartition — ``__grp`` is a
-        deterministic function of the keys, so hash-partitioning by it
-        alone already co-locates every key (``HashPartitioning(__grp)``
-        satisfies the window's clustering requirement; Catalyst inserts no
-        second exchange), and the window's sort doubles as the write's
-        layout sort. A ``__del_lsn`` column (partial-update mode: set on
-        source rows, null on target rows) turns on the window fill: a
-        winning non-tombstone source row whose ``__del_lsn`` is null takes
-        the target's value for each null value column and ``__extras``.
+        ``result`` is the aligned batch (``__rank``/``__tie``/``__is_tgt``,
+        ``__bucket``), unioned with the target rows for a COW rewrite. The
+        LWW resolution runs HERE, as a rank-1 ``row_number`` window over
+        ``(__bucket, __grp, keys)`` directly on top of the write repartition
+        — ``__grp`` is a deterministic function of the keys, so
+        hash-partitioning by it alone already co-locates every key
+        (``HashPartitioning(__grp)`` satisfies the window's clustering
+        requirement; Catalyst inserts no second exchange), and the window's
+        sort doubles as the write's layout sort. One exchange, one sort,
+        one window for every unit kind."""
+        from pyspark.sql import Window as W
 
-        ``pre_grouped=True``: the caller already partitioned ``result`` by
-        this exact mapping (and sorted it — the apply loop's clustered
-        reduce window); the write happens in place with no exchange."""
         keys = snap.key_cols
+        lsnc = snap.lsn_col
         new_version = snap.version + 1
         out_dir = self._data_dir(new_version)
         # partition the write by a DETERMINISTIC bucket-group id — unlike
@@ -1986,7 +1977,10 @@ class LakeTable:
         # manifest pruning. Written as a PLAIN parquet write — the
         # dynamic-partition (partitionBy) commit path is ~10× slower for
         # many small partitions and serializes in the committer. Sort within
-        # partitions keeps bucket ids RLE-cheap and row groups clustered.
+        # partitions keeps bucket ids RLE-cheap and row groups clustered,
+        # and the secondary sort by key makes parquet row-group min/max
+        # stats on the key columns tight, so pushed key-equality predicates
+        # (point lookups) skip row groups inside each bucket file.
         # The file count follows the shuffled bytes: the count-free
         # repartition lets AQE coalesce adjacent groups, so a small commit
         # writes one file instead of one tiny file per core (each one more
@@ -1997,74 +1991,71 @@ class LakeTable:
         # (group→partition mapping via precomputed salts: plain
         # repartition(group) would hash-collide groups — ~1/e of writers
         # idle, files spanning unrelated bucket ranges.)
-        group = self._write_group(snap)
-        if pre_grouped:
-            # the caller already partitioned ``result`` by this exact
-            # mapping (apply loop, via _write_group) and its reduce window
-            # sorted it by (__bucket, __grp, keys, ...) — no exchange here.
-            # The planner drops this sort as already satisfied (test_plans.py)
-            # unless an operator in between hides the ordering.
-            out = (
-                result.sortWithinPartitions("__bucket", "__grp", *keys)
-                .drop("__grp")
+        #
+        # Per-key LWW via ONE window sort, never an aggregation: a
+        # max_by(struct(whole row)) carries a variable-length buffer and
+        # degenerates to a buffer-churning SortAggregate (the exact plan
+        # shape cdc/reduce.py decomposed away). The source row wins iff its
+        # LSN is STRICTLY greater (__is_tgt breaks the tie toward the
+        # target; a null target LSN sorts last under DESC); same-LSN source
+        # events fall to (__rank, __tie). The explicit sortWithinPartitions
+        # below is subsumed by the window's sort (prefix match) and removed
+        # as redundant.
+        w = W.partitionBy("__bucket", "__grp", *keys).orderBy(
+            *self._resolution_order(lsnc)
+        )
+        grouped = result.withColumn("__grp", self._write_group(snap)).repartition("__grp")
+        cols = [F.col(c) for c in result.columns]
+        if partial_update:
+            # column-wise assembly on the same sort: D = the key's greatest
+            # in-batch delete LSN; a winning live source row takes, per value
+            # column, its greatest-LSN non-null writer above D — and, when
+            # the batch deleted nothing, the target's value for a column no
+            # event set. Whole-partition frames over the same window spec:
+            # no extra sort or exchange.
+            whole = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+            is_src = F.col("__is_tgt") == 0
+            tomb = F.col(TOMBSTONE_COL)
+            grouped = grouped.withColumn(
+                "__del_lsn", F.max(F.when(is_src & tomb, F.col(lsnc))).over(whole)
             )
-        elif fuse_lww:
-            from pyspark.sql import Window as W
-
-            lsnc = snap.lsn_col
-            # per-key LWW via ONE window sort, never an aggregation: a
-            # max_by(struct(whole row)) carries a variable-length buffer and
-            # degenerates to a buffer-churning SortAggregate (the exact
-            # plan shape cdc/reduce.py decomposed away — measured slower
-            # than the join it replaced). row_number's sort
-            # (__bucket, __grp, keys, lsn DESC, __is_tgt DESC) costs one
-            # pass, picks the strictly-greater-LSN source (target wins ties
-            # via __is_tgt; a null target LSN sorts last under DESC) — and IS
-            # the write's layout sort: the explicit sortWithinPartitions
-            # below is subsumed (prefix match) and removed as redundant.
-            # HashPartitioning(__grp) satisfies the window's clustering, so
-            # no second exchange either.
-            w = W.partitionBy("__bucket", "__grp", *keys).orderBy(
-                F.desc(lsnc), F.desc("__is_tgt")
+            died = F.col("__del_lsn")
+            live = is_src & ~tomb & (died.isNull() | (F.col(lsnc) > died))
+            fixed = {*keys, lsnc, TOMBSTONE_COL, "__bucket", "__rank", "__tie",
+                     "__is_tgt"}
+            cols = [
+                F.col(c) if c in fixed else F.when(is_src & ~tomb, F.coalesce(
+                    F.first(F.when(live, F.col(c)), ignorenulls=True).over(whole),
+                    F.when(died.isNull(), F.first(
+                        F.when(~is_src, F.col(c)), ignorenulls=True
+                    ).over(whole)),
+                )).otherwise(F.col(c)).alias(c)
+                for c in result.columns
+            ]
+        # at most ONE target row per key (the net state), so the batch's own
+        # survivor ranks 1st or 2nd: keeping ranks <= 2 up to the Observation
+        # lets it count the resolved batch even where the target wins
+        ranked = grouped.select(
+            *cols, "__grp",
+            F.row_number().over(w).alias("__rn"),
+            F.count(F.when(F.col("__is_tgt") == 0, 1)).over(
+                w.rowsBetween(W.unboundedPreceding, W.currentRow)
+            ).alias("__src_n"),
+        ).where(F.col("__rn") <= 2)
+        if obs is not None:
+            top_src = (F.col("__is_tgt") == 0) & (F.col("__src_n") == 1)
+            ranked = ranked.observe(
+                obs,
+                F.count(F.when(top_src, 1)).alias("rows"),
+                F.count(F.when(top_src & F.col(TOMBSTONE_COL), 1)).alias("deletes"),
             )
-            cols = [F.col(c) for c in result.columns]
-            if "__del_lsn" in result.columns:
-                # partial update: a winning live source patch with no
-                # in-batch delete below it keeps the target's value for every
-                # column it leaves null. The target's value comes from a
-                # whole-partition frame over the same window spec, so it
-                # rides the same Window node (no extra sort or exchange).
-                whole = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-                fill = ((F.col("__is_tgt") == 0) & ~F.col(TOMBSTONE_COL)
-                        & F.col("__del_lsn").isNull())
-                fixed = {*keys, lsnc, TOMBSTONE_COL, "__bucket", "__is_tgt",
-                         "__del_lsn"}
-                cols = [
-                    F.col(c) if c in fixed else F.when(fill, F.coalesce(
-                        F.col(c),
-                        F.first(F.when(F.col("__is_tgt") == 1, F.col(c)),
-                                ignorenulls=True).over(whole),
-                    )).otherwise(F.col(c)).alias(c)
-                    for c in result.columns
-                ]
-            out = (
-                result.withColumn("__grp", group)
-                .repartition("__grp")
-                .select(*cols, "__grp", F.row_number().over(w).alias("__rn"))
-                .where(F.col("__rn") == 1)
-                .sortWithinPartitions("__bucket", "__grp", *keys)
-                .drop("__grp", "__is_tgt", "__rn", "__del_lsn")
-            )
-        else:
-            # secondary sort by key: parquet row-group min/max stats on the
-            # key columns become tight, so pushed key-equality predicates
-            # (point lookups) skip row groups inside each bucket file
-            out = (
-                result.withColumn("__grp", group)
-                .repartition("__grp")
-                .drop("__grp")
-                .sortWithinPartitions("__bucket", *keys)
-            )
+        out = ranked.where(F.col("__rn") == 1)
+        live_src = (F.col("__is_tgt") == 0) & ~F.col(TOMBSTONE_COL)
+        for name, expr in winner_cols or []:
+            out = out.withColumn(name, F.when(live_src, expr).otherwise(F.col(name)))
+        out = out.sortWithinPartitions("__bucket", "__grp", *keys).drop(
+            "__grp", "__rn", "__src_n", "__rank", "__tie", "__is_tgt"
+        )
         (
             out.write.mode("overwrite")
             .options(**self._parquet_write_options(out.columns))
@@ -2079,11 +2070,7 @@ class LakeTable:
                 # subtree entirely (e.g. the watermark guard filtered every
                 # source row on a redelivered batch) — no metrics row is ever
                 # produced. Fall back to an explicit (tiny) count job.
-                row = src.agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    F.count(F.when(F.col(op_col) == "delete", 1)).alias("deletes"),
-                ).collect()[0]  # bounded-collect: one aggregate row
-                merge_counts = {"rows": row["rows"], "deletes": row["deletes"]}
+                merge_counts = self._source_counts(s_rows, keys, lsnc)
         if stats_out is not None:
             stats_out["rows"] = merge_counts["rows"]
             stats_out["deletes"] = merge_counts["deletes"]
