@@ -42,9 +42,10 @@ def nfc(col: Column) -> Column:
 def normalize_content(col: Column) -> Column:
     """Normalized content column; nulls pass through. Catalyst treats
     ``reflect`` as nondeterministic: project the result once, then reuse it.
-    Line endings are rewritten first: CR and LF are NFC starters that never
-    compose with a neighbour, so the rewrite commutes with NFC."""
-    return nfc(normalize_line_endings(col))
+    As one expression, NFC goes innermost so its gate and ``reflect`` read
+    the input column itself; the order does not change the result (CR and
+    LF are NFC starters that never compose with a neighbour)."""
+    return normalize_line_endings(nfc(col))
 
 
 def content_digest(col: Column) -> Column:
