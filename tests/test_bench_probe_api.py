@@ -1,7 +1,7 @@
 """The benchmark's traced probes (``cdcbench/run.py``, ``probes``) call the
-engine's reduce and content functions directly; the benchmark tree is
-frozen, so a signature change there must fail here, not on its next traced
-run. Same calls, on a tiny frame."""
+engine's reduce and content functions directly. ``cdcbench/`` changes only
+together with the benchmark, so an engine signature change must fail here,
+not on the next traced run. Same calls, on a tiny frame."""
 
 import hashlib
 
