@@ -1,6 +1,6 @@
 """End-to-end CDC engine scenarios (FIXTURES.md §A4, north-star test matrix):
 LWW basics, out-of-order delivery, duplicate redelivery, delete semantics,
-mid-stream schema evolution, rename/widen, crash-resume, hot-key salting,
+mid-stream schema evolution, rename/widen, crash-resume, a skewed log,
 and full oracle equality under the content-sha256 invariant."""
 
 import hashlib
@@ -186,27 +186,25 @@ def test_crash_resume_byte_identical(spark, tmp_path):
     )
 
 
-def test_hot_key_knobs_do_not_change_results(spark, tmp_path):
-    """A skewed log needs no salting (see cdc/reduce.py): it applies
-    identically through the decomposed reduce (winners aggregation +
-    candidate join, forced by ``small_batch_events=0``) and the small-batch
-    window reduce."""
+def test_skewed_log_matches_oracle(spark, tmp_path):
+    """A skewed log (60% of events on one mega-repo) needs no salting: the
+    merge window resolves each hot key in one sorted partition, and the
+    final state equals the sequential replay."""
     events_df = generate_event_log(spark, 3000, seed=13, n_repos=10,
                                    n_mega_repos=1, hot_fraction=0.6,
                                    paths_per_repo=5)
     rows = [r.asDict(recursive=True) for r in events_df.collect()]
-    df = lambda: spark.createDataFrame(rows, EVENT_SCHEMA)  # noqa: E731
 
-    eng_a = CdcEngine(spark, str(tmp_path / "a"), num_buckets=4,
-                      small_batch_events=0)
-    eng_a.apply_log(df(), events_per_batch=1000)
+    eng = CdcEngine(spark, str(tmp_path / "hot"), num_buckets=4)
+    eng.apply_log(spark.createDataFrame(rows, EVENT_SCHEMA), events_per_batch=1000)
+    got = {(r["repo"], r["path"]): r.asDict() for r in eng.final_state().collect()}
 
-    eng_b = CdcEngine(spark, str(tmp_path / "b"), num_buckets=4)
-    eng_b.apply_log(df(), events_per_batch=1000)
-
-    s1 = {(r["repo"], r["path"]): r.asDict() for r in eng_a.final_state().collect()}
-    s2 = {(r["repo"], r["path"]): r.asDict() for r in eng_b.final_state().collect()}
-    assert s1 == s2
+    want = replay_oracle(rows)
+    assert set(got) == set(want)
+    for k, wrow in want.items():
+        assert got[k]["content_sha256"] == wrow["content_sha256"], k
+        assert got[k]["last_lsn"] == wrow["last_lsn"], k
+        assert got[k]["commit"] == wrow["commit"], k
 
 
 @pytest.mark.parametrize("scatter", [False, True])

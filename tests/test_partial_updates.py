@@ -106,6 +106,26 @@ def test_stale_patch_cannot_resurrect_deleted_key(spark, tmp_path):
     assert ("r", "a") not in state(eng)
 
 
+def test_stale_patch_below_stored_tombstone_feeds_no_column(spark, tmp_path):
+    # the tombstone at lsn 60 is in the table; the next call brings a live
+    # patch above it and a redelivered patch below it. In-order replay
+    # drops the lsn-47 commit with the delete, so scatter must too.
+    eng = mk(spark, tmp_path)
+    once = dict(n_batches=1, scatter_delivery=True)
+    apply(eng, spark, [
+        ev(10, "insert", "r", "a", "c10", "py", "v10"),
+        ev(60, "delete", "r", "a"),
+    ], **once)
+    apply(eng, spark, [
+        ev(61, "update", "r", "a", lang="go"),
+        ev(47, "update", "r", "a", commit="c47"),
+    ], **once)
+    row = state(eng)[("r", "a")]
+    assert row["lang"] == "go" and row["last_lsn"] == 61
+    assert row["commit"] is None
+    assert row["content"] is None and row["content_sha256"] is None
+
+
 def test_stale_patches_in_mixed_tail_keep_target(spark, tmp_path):
     # scatter delivery holds the watermark, so the stale tail reaches the
     # merge. The table does not record a's delete at lsn 4: only the live

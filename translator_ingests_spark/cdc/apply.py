@@ -3,11 +3,12 @@
 Micro-batch driver loop (``Trigger.AvailableNow``-style batch-over-log):
 per batch it (1) validates events, (2) splits at schema-change events and
 applies those to the table schema *before* the dependent data sub-batch,
-(3) reduces each key to its max-LSN survivor (within-batch LWW; skew is
-benign — see cdc/reduce.py), (4) derives the vectorized content plane (normalization +
-content_sha256), (5) executes one idempotent bucket-pruned MERGE, and
-(6) records a checkpoint manifest (source offsets, applied LSN range,
-code hash, per-partition lineage, throughput metrics).
+(3) aligns the valid events to the lake schema, (4) executes one
+idempotent bucket-pruned MERGE whose single window resolves each key to its
+last writer over the raw events and the target row, then derives the content
+plane (normalization + content_sha256) on the winners only, and (5) records
+a checkpoint manifest (source offsets, applied LSN range, code hash,
+per-partition lineage, throughput metrics).
 
 Exactly-once: the lake commit is atomic and carries the batch id; replaying
 any already-committed batch is a metadata no-op (lake guard) and the
@@ -31,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from translator_ingests_spark.cdc.reduce import lww_reduce, tie_hash
+from translator_ingests_spark.cdc.reduce import tie_hash
 from translator_ingests_spark.functions.content import (
     content_digest,
     nfc,
@@ -83,6 +84,11 @@ BASE_FIELDS: list[tuple[str, str]] = [
 _DATA_OPS = ("insert", "update", "delete")
 
 
+def _is_valid():
+    """A data event the engine applies: key columns and LSN all set."""
+    return F.col("repo").isNotNull() & F.col("path").isNotNull() & F.col("lsn").isNotNull()
+
+
 def compute_code_hash() -> str:
     """sha256 over the engine's own source files, truncated to 8 hex chars —
     code changes auto-invalidate checkpoints (reference: pipeline.py:124-141)."""
@@ -110,7 +116,6 @@ class CdcEngine:
         auto_expire_every: int | None = None,
         expire_keep_last: int = 16,
         expire_max_cursor_lag: int | None = None,
-        small_batch_events: int = 1_000_000,
         write_mode: str = "cow",
         partial_updates: bool = False,
         bloom_cols: list[str] | dict[str, int] | None = None,
@@ -148,11 +153,6 @@ class CdcEngine:
         self.auto_expire_every = auto_expire_every
         self.expire_keep_last = expire_keep_last
         self.expire_max_cursor_lag = expire_max_cursor_lag
-        # batches at or below this many valid events are resolved by the
-        # merge window alone (the decomposed winners plan's fixed cost never
-        # amortizes there); larger whole-row batches first take the
-        # decomposed primitive-buffer reduce that holds 0.8+ scaling at 96M
-        self.small_batch_events = small_batch_events
         # "cow" rewrites touched bucket files per batch (read-optimized);
         # "mor" (merge-on-read) writes each batch as delta files — O(batch)
         # write cost regardless of key spread, resolved at read by the LWW
@@ -330,38 +330,16 @@ class CdcEngine:
         # so a data unit costs exactly ONE Spark job (the merge) on the
         # no-schema-change fast path. (Round 2 ran one meta job plus a
         # lineage job per batch — one extra full scan per batch, a per-unit
-        # fixed cost that capped N→4N scaling efficiency. Hot-key detection
-        # ran here too until lww_reduce's phase-1 max(lsn) made skew benign
-        # via map-side combine — no salting, so nothing to detect.)
-        is_valid = (
-            F.col("repo").isNotNull() & F.col("path").isNotNull() & F.col("lsn").isNotNull()
-        )
-        # Every aggregate here is a primitive-buffer DeclarativeAggregate so
-        # the whole pass stays inside whole-stage-codegen HashAggregate.
-        # (collect_set/collect_list would demote the pass to
-        # ObjectHashAggregate — interpreted, boxing per row; profiled 5.8×
-        # thread-CPU inflation at 8 cores on 48M events. The bucket set is
-        # carried by bit_or masks and schema events come from the
-        # pushed-down filter scan below.)
+        # fixed cost that capped N→4N scaling efficiency.)
         snap0 = self.table.head()
-        meta_aggs = [
-            F.count(F.lit(1)).alias("events_in"),
-            F.count(F.when(is_valid, 1)).alias("rows"),
-            F.min(F.when(is_valid, F.col("source_offset"))).alias("offset_min"),
-            F.max(F.when(is_valid, F.col("source_offset"))).alias("offset_max"),
-            F.min(F.when(is_valid, F.col("lsn"))).alias("lsn_min"),
-            F.max(F.when(is_valid, F.col("lsn"))).alias("lsn_max"),
+        meta_q = events.groupBy("__batch", "source_partition").agg(
+            *self._lineage_aggs(snap0),
             # schema-change presence rides the same pass so the dedicated
             # schema-event scan below runs ONLY when one exists — on the
             # common no-schema-change log that second full-log job (and its
             # scan of the schema_change struct column) disappears entirely
             F.count(F.when(F.col("op") == "schema_change", 1)).alias("n_schema"),
-        ]
-        # the batch's affected-bucket SET as bit_or masks — primitive LONG
-        # buffers, one word per 64 buckets, so the pass stays a codegen
-        # HashAggregate and each data unit needs no bucket-probe job
-        meta_aggs += self._bucket_mask_aggs(is_valid, snap0)
-        meta_q = events.groupBy("__batch", "source_partition").agg(*meta_aggs)
+        )
 
         meta_rows = meta_q.collect()  # bounded-collect: one row per (batch, source partition)
         if any(r["n_schema"] for r in meta_rows):
@@ -467,7 +445,7 @@ class CdcEngine:
         consumed = 0
         for b in present:
             batch = events.filter(F.col("__batch") == b).drop("__batch")
-            schema_rows = sorted(schema_events.get(b, []), key=lambda r: r["lsn"])
+            schema_rows = schema_events.get(b, [])
             # a no-schema-event batch is consumed by exactly one job (the
             # merge) — caching it would cost a pass without saving one
             batch_cached = cache_log and bool(schema_rows)
@@ -556,14 +534,29 @@ class CdcEngine:
         return manifests
 
     # -- one committed unit ----------------------------------------------------
-    def _bucket_mask_aggs(self, is_valid, snap) -> list:
-        """``bit_or`` aggregates of the valid events' bucket ids: one LONG
-        mask word per 64 buckets (``bucket_mask_<w>``; same bucket rule as
-        ``LakeTable._bucket_expr``). shiftleft takes a column shift only
-        through SQL — the pyspark wrapper wants an int literal."""
+    @staticmethod
+    def _lineage_aggs(snap) -> list:
+        """The per-source-partition lineage aggregates: event and validity
+        counts, the valid events' offset and LSN ranges, and their bucket
+        set as ``bit_or`` masks — one LONG word per 64 buckets
+        (``bucket_mask_<w>``; same bucket rule as ``LakeTable._bucket_expr``).
+        Every aggregate has a primitive buffer, so the pass stays a
+        whole-stage-codegen HashAggregate (collect_set/collect_list would
+        demote it to an interpreted ObjectHashAggregate — profiled 5.8×
+        thread-CPU inflation at 8 cores on 48M events). shiftleft takes a
+        column shift only through SQL — the pyspark wrapper wants an int
+        literal."""
+        is_valid = _is_valid()
         key_sql = ", ".join(f"`{c}`" for c in snap.key_cols)
         b = f"pmod(xxhash64({key_sql}), {snap.num_buckets})"
         return [
+            F.count(F.lit(1)).alias("events_in"),
+            F.count(F.when(is_valid, 1)).alias("rows"),
+            F.min(F.when(is_valid, F.col("source_offset"))).alias("offset_min"),
+            F.max(F.when(is_valid, F.col("source_offset"))).alias("offset_max"),
+            F.min(F.when(is_valid, F.col("lsn"))).alias("lsn_min"),
+            F.max(F.when(is_valid, F.col("lsn"))).alias("lsn_max"),
+        ] + [
             F.bit_or(F.when(is_valid, F.expr(
                 f"CASE WHEN {b} DIV 64 = {w} "
                 f"THEN shiftleft(CAST(1 AS BIGINT), CAST({b} % 64 AS INT)) END"
@@ -574,7 +567,7 @@ class CdcEngine:
     @staticmethod
     def _buckets_from_mask(lineage_rows: list, num_buckets: int) -> list[int]:
         """Decode the per-partition ``bucket_mask_<w>`` words of
-        :meth:`_bucket_mask_aggs` into the sorted bucket list."""
+        :meth:`_lineage_aggs` into the sorted bucket list."""
         out = []
         for w in range(-(-num_buckets // 64)):
             mask = 0
@@ -606,10 +599,7 @@ class CdcEngine:
         t0 = time.monotonic()
         # NOTE: no extra persist here — `data` is a cheap filter over the
         # already-cached batch; a second cache would double memory per batch
-        is_valid = (
-            F.col("repo").isNotNull() & F.col("path").isNotNull() & F.col("lsn").isNotNull()
-        )
-        valid = data.filter(is_valid)
+        valid = data.filter(_is_valid())
 
         if pre_lineage is not None:
             # FAST PATH: lineage/stats/buckets were computed by
@@ -621,18 +611,10 @@ class CdcEngine:
             # standalone path (schema-split sub-batches, streaming epochs,
             # direct calls): ONE aggregation job yields per-partition
             # lineage, the global validity stats (summed driver-side) and
-            # the bucket masks — primitive buffers only, so the pass stays
-            # inside whole-stage-codegen HashAggregate (see apply_log's
-            # meta aggregation comment).
+            # the bucket masks
             lineage_nb = snap.num_buckets
             lineage_rows = data.groupBy("source_partition").agg(
-                F.count(F.lit(1)).alias("events_in"),
-                F.count(F.when(is_valid, 1)).alias("rows"),
-                F.min(F.when(is_valid, F.col("source_offset"))).alias("offset_min"),
-                F.max(F.when(is_valid, F.col("source_offset"))).alias("offset_max"),
-                F.min(F.when(is_valid, F.col("lsn"))).alias("lsn_min"),
-                F.max(F.when(is_valid, F.col("lsn"))).alias("lsn_max"),
-                *self._bucket_mask_aggs(is_valid, snap),
+                *self._lineage_aggs(snap)
             ).collect()  # bounded-collect: one row per source partition
         events_in = sum(r["events_in"] for r in lineage_rows)
         if events_in == 0:
@@ -665,30 +647,10 @@ class CdcEngine:
             self._buckets_from_mask(lineage_rows, snap.num_buckets)
             if lineage_nb == snap.num_buckets else None
         )
-        # The merge window IS the LWW reduce: a unit hands the merge its raw
-        # valid events and each key is resolved once, in the merge's one
-        # exchange. Only a whole-row batch above ``small_batch_events``
-        # first takes the decomposed primitive-buffer reduce (lww_reduce):
-        # its persisted phase-1 winners' exact count gates the broadcast
-        # into the candidate join (<=1M winner rows ~ tens of MB — the
-        # event rows then never shuffle; above that the planner's
-        # shuffled-hash + AQE skew path stands), and the reduced rows enter
-        # the same window. Partial-update units always take the window: the
-        # decomposed reduce is whole-row.
-        winners = None
-        events = valid
-        if n_valid > self.small_batch_events and not self.partial_updates:
-            winners = valid.groupBy(*snap.key_cols).agg(
-                F.max(F.col("lsn")).alias("__wl")
-            ).persist()
-            events = lww_reduce(
-                valid,
-                keys=list(snap.key_cols),
-                broadcast_winners=winners.count() <= 1_000_000,
-                winners=winners,
-            )
-
-        source = self._derive_columns(events, snap)
+        # The merge window IS the LWW reduce: a unit of any size hands the
+        # merge its raw valid events and each key is resolved once, in the
+        # merge's one exchange.
+        source = self._derive_columns(valid, snap)
         unit_mode = self._resolve_write_mode(snap, affected_buckets, n_valid)
         metrics = {
             "events_in": int(events_in),
@@ -720,8 +682,6 @@ class CdcEngine:
             winner_cols=self._content_cols(snap),
             src_num_buckets=snap.num_buckets,
         )
-        if winners is not None:
-            winners.unpersist()
         elapsed = max(time.monotonic() - t0, 1e-9)
         n_red = merge_stats.get("rows", 0)
         n_del = merge_stats.get("deletes", 0)

@@ -17,6 +17,11 @@ therefore not needed.
 The candidate join skew is handled by AQE skew-join splitting (reference
 analog: hot-edge capping at semmeddb.py:200-233, except we must preserve
 the winner exactly, so reduce, never cap).
+
+The CDC engine does not call ``lww_reduce``: its merge window resolves each
+key over the raw events at every batch size (``LakeTable.merge``), using
+``tie_hash`` for the same-LSN order. ``lww_reduce`` serves standalone
+reduce-only queries.
 """
 
 from __future__ import annotations
@@ -44,8 +49,6 @@ def lww_reduce(
     keys: list[str],
     lsn_col: str = "lsn",
     op_col: str = "op",
-    broadcast_winners: bool | None = None,
-    winners: DataFrame | None = None,
     simple: bool = False,
 ) -> DataFrame:
     """Reduce to one row per key: the max-(lsn, op_rank, hash) survivor.
@@ -70,34 +73,17 @@ def lww_reduce(
        per key that share the winning LSN, so the unavoidable SortAggregate
        runs on ~|keys| rows, not |events|. The xxhash64 tie hash is also
        only computed here, never over the full batch.
-
-    ``broadcast_winners`` gates an explicit broadcast hint on the winners
-    side. AQE *can* convert the join to broadcast at runtime, but only after
-    materializing both child exchanges — by which time the (1000× larger)
-    event exchange has already been written. A caller that KNOWS the batch's
-    key cardinality (the CDC engine's upfront lineage aggregation carries an
-    approx_count_distinct of the key hash) passes True to skip that exchange
-    in the static plan; None leaves the decision to the planner.
-
-    ``winners`` optionally supplies a precomputed (and typically persisted)
-    phase-1 result with schema ``keys + __wl`` — the CDC engine materializes
-    it once per batch to take its exact count for the broadcast gate, and
-    passing it here lets the merge job reuse the cached rows instead of
-    re-aggregating the events.
     """
     cols = df.columns
     if simple:
         # SMALL-BATCH shape for standalone reduce-only queries: one max_by
-        # aggregation over the same total order (lsn, op_rank, tie hash).
-        # The decomposed plan's winners materialization + exact-count
-        # broadcast gate cost a fixed ~0.2s/batch that never amortizes
-        # below ~1M events (round-3 VERDICT #3); under a consumer that
-        # prunes columns (count(), key-only projections) Catalyst drops the
-        # unused max_by aggregate and the whole payload/tie-hash
-        # computation with it. Caller contract: ``lsn_col`` non-null — all-
-        # null-LSN keys need the decomposed path's null-safe join. (The CDC
-        # engine never reduces small batches here: its merge window
-        # resolves the raw events directly.)
+        # aggregation over the same total order (lsn, op_rank, tie hash),
+        # one job where the decomposed plan runs its winners aggregation
+        # and a join; under a consumer that prunes columns (count(),
+        # key-only projections) Catalyst drops the unused max_by aggregate
+        # and the whole payload/tie-hash computation with it. Caller
+        # contract: ``lsn_col`` non-null — all-null-LSN keys need the
+        # decomposed path's null-safe join.
         payload = F.struct(*[F.col(c) for c in cols]).alias("__row")
         order = F.struct(
             F.col(lsn_col).alias("o0"),
@@ -106,10 +92,7 @@ def lww_reduce(
         )
         reduced = df.groupBy(*keys).agg(F.max_by(payload, order).alias("__row"))
         return reduced.select(*[F.col(f"__row.{c}").alias(c) for c in cols])
-    if winners is None:
-        winners = df.groupBy(*keys).agg(F.max(F.col(lsn_col)).alias("__wl"))
-    if broadcast_winners:
-        winners = F.broadcast(winners)
+    winners = df.groupBy(*keys).agg(F.max(F.col(lsn_col)).alias("__wl"))
     w = winners.alias("__w")
     d = df.alias("__d")
     # null-safe on the keys AND the lsn so all-null-LSN keys still reduce

@@ -1771,8 +1771,13 @@ class LakeTable:
         ``partial_update=True`` (Paimon partial-update analog): a non-delete
         event's NULL value column means "no change", so the window assembles
         the survivor column-wise — each value column takes its greatest-LSN
-        non-null writer above the key's greatest in-batch delete ``D``; with
-        no in-batch delete, a column no event set keeps the TARGET's value.
+        non-null writer above the key's delete bound ``D`` (its greatest
+        in-batch delete or stored tombstone LSN); with no delete, a column
+        no event set keeps the TARGET's value. One limit remains: the lake
+        keeps one LSN per row, not per column, so under scatter delivery a
+        patch that arrives below a LIVE target's LSN is dropped whole, where
+        in-order replay would keep each column of it that no later event
+        set.
         COW only: the merge-on-read fold is whole-row, so a partial delta
         would clobber unset columns at read time — requesting both raises.
 
@@ -2008,16 +2013,17 @@ class LakeTable:
         cols = [F.col(c) for c in result.columns]
         if partial_update:
             # column-wise assembly on the same sort: D = the key's greatest
-            # in-batch delete LSN; a winning live source row takes, per value
-            # column, its greatest-LSN non-null writer above D — and, when
-            # the batch deleted nothing, the target's value for a column no
-            # event set. Whole-partition frames over the same window spec:
-            # no extra sort or exchange.
+            # delete LSN, an in-batch delete or the stored tombstone (so a
+            # patch redelivered below a tombstone feeds no column); a winning
+            # live source row takes, per value column, its greatest-LSN
+            # non-null writer above D — and, when there is no D, the target's
+            # value for a column no event set. Whole-partition frames over
+            # the same window spec: no extra sort or exchange.
             whole = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
             is_src = F.col("__is_tgt") == 0
             tomb = F.col(TOMBSTONE_COL)
             grouped = grouped.withColumn(
-                "__del_lsn", F.max(F.when(is_src & tomb, F.col(lsnc))).over(whole)
+                "__del_lsn", F.max(F.when(tomb, F.col(lsnc))).over(whole)
             )
             died = F.col("__del_lsn")
             live = is_src & ~tomb & (died.isNull() | (F.col(lsnc) > died))

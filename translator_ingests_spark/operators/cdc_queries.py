@@ -110,9 +110,10 @@ def cdc_lww_reduce_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     from translator_ingests_spark.cdc.reduce import lww_reduce
 
     log = events_as_cdc_log(spark, sf_dir)
-    # mirror the engine's small-batch gate (CdcEngine.small_batch_events):
-    # below ~1M events one max_by job beats the decomposed winners plan;
-    # the footer-only count of the source table is free
+    # one max_by job beats the decomposed winners aggregation + join below
+    # ~1M events, whose fixed cost never amortizes there; above it the
+    # max_by's whole-row SortAggregate dominates (see lww_reduce). The
+    # footer-only count of the source table is free
     n = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     red = lww_reduce(log, keys=["repo", "path"], simple=n <= 1_000_000)
     return (

@@ -74,12 +74,10 @@ def get_spark(
         # selectivity estimates are unreliable enough that a raised static
         # threshold was observed to broadcast a filtered FACT table (q3's
         # lineitem side — a driver-collect of millions of rows, and exactly
-        # the side that must stream at 100 TB). The LWW reduce's winners
-        # side doesn't need the static threshold — the engine passes an
-        # explicit broadcast() hint when its exact per-batch key count
-        # qualifies (cdc/apply.py). The ADAPTIVE threshold, which acts on
-        # runtime-exact shuffle sizes, stays at 64m so genuinely small
-        # post-filter sides still convert to broadcast at runtime.
+        # the side that must stream at 100 TB). The ADAPTIVE threshold,
+        # which acts on runtime-exact shuffle sizes, stays at 64m so
+        # genuinely small post-filter sides still convert to broadcast at
+        # runtime.
         .config("spark.sql.autoBroadcastJoinThreshold", "10m")
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
     )
